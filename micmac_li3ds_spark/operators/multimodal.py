@@ -2521,12 +2521,6 @@ def decode_auto(payload: bytes, mime: str) -> list[float]:
 # spans) is the generator's own layout arithmetic, so any walker
 # mis-parse (vint width, lace arithmetic, the BlockGroup keyframe rule,
 # an unknown-size element end, a cue seek bound) is a value mismatch.
-#
-# Registration note (registry.py ledger): q_mm_mkv_frame_sample_range
-# was implemented and locally oracle-green in r15 but registered in r16
-# (the r15 window froze at 48 forced + 2 mandated slots and the r16
-# window was arithmetic-full before the key existed); POST_FREEZE_LEDGER
-# reserves its birth attestation for r17's single free slot.
 
 MEDIA_MKV_PARQUET = os.path.join(
     _REPO, "fixtures", "parquet", "media_mkv.parquet"
@@ -3132,13 +3126,9 @@ WHERE keyframe[i + 1]
     tags=("multimodal", "mapinpandas"),
 )
 def q_mm_mkv_frame_sample_range(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registered r16 per the r15-verdict ledger (registry.py:
-    POST_FREEZE_LEDGER — the r16 window froze arithmetic-full before
-    this key existed, so its birth attestation takes r17's single free
-    slot). Locally oracle-green at birth (tests/test_round15_mkv.py
-    runs MKV_FRAME_RANGE_ORACLE through DuckDB and value-compares). The
-    query: time-ranged keyframe sampling over the Matroska fixture
-    corpus at a fixed [120, 700] ms window — cued rows take the Cues
-    seek, the no-cues and non-conformant rows take the full-walk
-    fallback, and one row sits entirely outside the window."""
+    """Time-ranged keyframe sampling over the Matroska fixture corpus
+    at a fixed [120, 700] ms window — cued rows take the Cues seek, the
+    no-cues and non-conformant rows take the full-walk fallback, and
+    one row sits entirely outside the window. Oracle-checked locally by
+    tests/test_round15_mkv.py."""
     return mkv_frame_sample_range(spark, _MKV_FSR_LO_MS, _MKV_FSR_HI_MS)

@@ -291,8 +291,7 @@ def q_llm_warc_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     HTTP status, block length and byte-sum. The step upstream of every
     dedup/quality/language operator in the LLM family; sf_dir is
     unused (the fixture corpus is scale-independent, the media-key
-    convention). Registered r17 post-freeze; POST_FREEZE_LEDGER
-    reserves its birth attestation for r18's free slot."""
+    convention)."""
     return warc_records(load_warc(spark)).orderBy("file_id", "rec_idx")
 
 
@@ -438,9 +437,7 @@ def q_llm_warc_to_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     responses as a documents-shaped frame (doc_id, text, source) —
     ingest composed into the dedup/quality/language family's input
     contract. sf_dir is unused (fixture corpus, the media-key
-    convention). Registered r18 post-freeze (the window is the
-    mandated 48+2 composition); POST_FREEZE_LEDGER reserves its birth
-    attestation for one of r19's three free slots."""
+    convention)."""
     return warc_to_documents(load_warc(spark)).orderBy("doc_id")
 
 
@@ -559,8 +556,7 @@ def q_llm_warc_links(spark: SparkSession, sf_dir: str) -> DataFrame:
     read_warc_link_graph): no scheme → same-host relative; http(s) →
     authority lowercased, port stripped (host identity, any port);
     other schemes (mailto, javascript) dropped. sf_dir unused (fixture
-    corpus). Registered r18 post-freeze; POST_FREEZE_LEDGER reserves
-    an r19 birth slot."""
+    corpus)."""
     return resolve_links(warc_hrefs(load_warc(spark)))
 
 
@@ -631,8 +627,7 @@ def q_llm_url_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     (regexp/array expressions, ``canonical_urls`` — shared with the
     streaming href log's read_warc_frontier) over warc_hrefs' raw feed
     — the mapInPandas boundary stays at byte parsing, string surgery
-    stays JVM-side. sf_dir unused (fixture corpus). Registered r18
-    post-freeze; POST_FREEZE_LEDGER reserves an r19 birth slot."""
+    stays JVM-side. sf_dir unused (fixture corpus)."""
     return canonical_urls(warc_hrefs(load_warc(spark)))
 
 

@@ -8,7 +8,12 @@ dicts to the driver.
 
 from __future__ import annotations
 
+import functools
+import glob
 import importlib
+import json
+import os
+import re
 from collections.abc import Callable
 from dataclasses import dataclass, field
 from typing import Optional
@@ -55,495 +60,106 @@ _OPERATOR_MODULES = [
 
 _loaded = False
 
-# The driver's CORRECTNESS check covers only the first N registry entries
-# (observed N=50 in rounds 1 and 2). Registration order is therefore a
-# verification resource: this list pins which queries occupy the checked
-# window. The window policy is ROTATION FOR COVERAGE — every oracle-backed
-# query must receive a hard driver row at least once, 50 per round; queries
-# rotated out stay guarded by the local exact-parity mirror (tools/check.py)
-# and pytest. Coverage ledger:
-#   round 1: first 50 in registration order (relational/agg/join/window/fn
-#            families) — 48 green, 2 repaired for round 2.
-#   round 2: repaired ×5 + LLM text/vector, analytics, ETL, sampling,
-#            reshape, stream-twin, multimodal families — 47 green, 3
-#            hash-red (Decimal/HUGEINT dtype leaks, fixed round 3).
-#   round 3: the 3 round-2 reds (dtype fixes in place) + 47 never-driver-
-#            tested queries (set ops, subqueries, UDF/UDTF surface,
-#            scans/sinks, topk, LLM-vector addenda, analytics composites,
-#            win-frame addenda, sessionize/snapshot, weighted sampling,
-#            skew/null-safe joins) — 48 green; q_win_range_frame and
-#            q_etl_sessionize hash-red (DuckDB epoch() DOUBLE vs Spark
-#            BIGINT, fixed round 5).
-#   round 4: no builder commits landed; the driver re-ran the round-3
-#            window against a REGENERATED corpus whose events.ts switched
-#            parquet ns→µs encoding, erroring all 7 events-reading queries
-#            in-window (loader fixed round 5; bench also repaired).
-#   round 5: the 7 round-4 erred queries + the 15-query never-tested
-#            remainder published in round 3 + every other events-reading
-#            query (re-prove the new loader under the driver's hash) +
-#            the headline/bench set — 50/50 green. After round 5 every
-#            oracle-backed query REGISTERED BEFORE round 5 had been
-#            driver-sampled ≥ once.
-#   round 6: the 28-query never-green remainder = q_agg_approx_distinct
-#            (erred no_oracle in r1; re-registered with a BANDED oracle
-#            — |HLL − exact| ≤ 4·rsd·exact as a value-checked boolean;
-#            rsd is a std-dev, 3σ risked spurious reds on corpus
-#            regen) + the 11 pre-round-5 never-sampled queries (the
-#            former rows-only keys all gained oracles: parquet-twin for
-#            the XML pair, hash-algebra for the multimodal pair, banded
-#            for the sketch profile) + the 16 round-5 additions. Then
-#            the 21 round-6 additions, then continuity — 50/50 green.
-#            The 3 queries committed AFTER this window froze
-#            (q_event_rfm, q_win_pct_of_total, q_audit_small_files)
-#            got no round-6 row; they lead the round-7 window below.
-#   round 7 (this window): first driver attestation for the 3 post-
-#            freeze round-6 additions (q_event_rfm carries its scale
-#            rewrite: broadcast order-statistic cutpoints replace the
-#            three global ntile windows — same green bar, 100×-safe
-#            plan) + the 16 round-7 additions in their birth round
-#            (graph/hist/BM25/cross-dedup/winsorize/ER batch, then the
-#            mining batch: ABC-Pareto, Gini, Markov transitions,
-#            cohort LTV, skyline, interpolation, moment-exact corr,
-#            multires time rollup, pointer-jumping CC, segment
-#            entropy) + freshness: 27 of the 31 queries whose newest
-#            row is round 1 (q_sort_multi, q_limit, q_fn_cond,
-#            q_fn_math — the most rot-resistant, no events/complex
-#            output — defer to round 8) and the 4 oldest round-2
-#            complex-output
-#            queries. Two corpus regenerations have happened since
-#            those r1/r2 rows; the round-4 events.ts re-encoding
-#            showed stale greens can rot silently. Remaining r1/r2
-#            tail rotates in round 8.
-#            Window composition is asserted against the live registry
-#            by tests/test_registry.py (ledger cannot drift from code).
-#   round 8 (this window): the round-8 additions in their birth round
-#            (q_etl_merge_upsert, the MERGE-shaped full-outer upsert;
-#            q_ts_anomaly, integer-algebra rolling z-score alerting;
-#            q_graph_sssp, frontier-BFS hop-distance histogram;
-#            q_agg_sketch_rollup, banded HLL partial-sketch union;
-#            q_win_moving_median, frameable exact percentile;
-#            q_llm_knn_recall, full-value-checked ANN recall gauge;
-#            q_layout_zorder, normalized Morton-curve skipping audit;
-#            q_etl_asof_snapshot, AS-OF time travel over the CDC log;
-#            q_agg_bitmap_rollup, exact bitmap partial-merge distinct;
-#            q_ts_downsample_lttb, integer-exact LTTB decimation whose
-#            oracle replays the same walk as a recursive LATERAL
-#            argmax; q_llm_winnowing + q_llm_winnow_matches, the MOSS
-#            local-overlap selector and its bounded posting-expansion
-#            match join; q_ts_seasonal_profile, hour-of-day factors)
-#            + 2 re-attestations of round-7 greens whose code/oracle
-#            changed THIS round and whose old rows therefore no longer
-#            attest the shipped artifact (q_agg_gini — Σ rk·x now
-#            accumulates as decimal(38,0) against the int64 wrap at
-#            sf1+, ADVICE r7; q_graph_cc — oracle rewritten from
-#            transitive closure to linear min-label propagation,
-#            ADVICE r7) + the ENTIRE remaining stale tail: the 31
-#            round-2 queries (ETL fixture family, LLM text remainder,
-#            TPC-H-derived reports, profile/forecast/sample, JDBC
-#            round-trip, multimodal stats, unpivot) and the 4 deferred
-#            rot-resistant r1 queries (q_sort_multi, q_limit,
-#            q_fn_cond, q_fn_math). All 35 were pre-flighted green
-#            through tools/check.py at sf0.01 before this window was
-#            cut. The 13 round-8 additions consumed every slot beyond
-#            the stale tail — birth-round attestation outranks
-#            continuity, so the longest-unsampled greens (round-4
-#            rows: set ops, subqueries, UDF surface, scans) rotate in
-#            round 9 instead.
-#            After round 8 no query's newest row predates round 4,
-#            and no r1/r2 row remains live (the round-4 events.ts
-#            incident's risk class is closed: every surviving
-#            attestation postdates both corpus regenerations).
-#   round 9 (this window): the 6 round-9 additions in their birth
-#            round (q_llm_lsh_recall, LSH candidate recall vs exact
-#            Jaccard; q_llm_semantic_dedup, SemDeDup cluster-scoped
-#            embedding dedup; q_agg_heavy_hitters, Misra-Gries
-#            candidates + exact verify; q_graph_kcore, fixed-peel
-#            core decomposition; q_layout_bucketed_join, shuffle-free
-#            co-located SMJ; q_layout_partition_pruning, planning-time
-#            partition pruning audit) +
-#            3 re-attestations whose CODE changed this round (the
-#            co-purchase edge build of q_graph_triangles / q_graph_cc /
-#            q_graph_sssp was rewritten from an uncapped grp ⋈ grp
-#            self-join to the shared single-shuffle capped builder
-#            copurchase_edges — their r8/earlier rows no longer attest
-#            the shipped artifact; verified locally equivalent via
-#            tools/check.py + a bit-exact edge-set equivalence test
-#            before this window was cut) + ALL 40 round-4 rows (the
-#            longest-unsampled greens: scans/sinks, set-op tails,
-#            the 7-key UDF/UDTF surface, 4 subqueries, IVF/kmeans/
-#            quant/knn tails, 5 TPC-H-style analytics, q_topk_global,
-#            q_win_nth_value, q_join_skew_salted/null_safe,
-#            q_etl_snapshot_diff, q_sample_weighted) + continuity
-#            fillers from the oldest (round-5) stratum in remaining
-#            slots. test_registry.py's staleness horizon is now
-#            max_round−4 (tightened from −5 this round), so the 40
-#            r4 keys are FORCED into this window while round 8 is
-#            still the newest committed CORRECTNESS file — the
-#            rotation shapes the window before the breach, not after.
-#   round 10 (this window): consolidation — zero new registry keys.
-#            ALL 48 keys whose newest row is round 5 (enumerated by
-#            test_registry.py::test_window_contains_every_stale_
-#            attestation the moment CORRECTNESS_r09 landed — the
-#            max_round−4 horizon working as designed): the r5 stratum
-#            spans the repaired-loader events queries, the TPC-H-style
-#            reports, agg/join/window/fn tails, set-op heads, the
-#            stream-twin trio, LLM text basics (exact-dedup/tokenize/
-#            knn/embed-dedup/token-count/fingerprint/train-split/
-#            seq-pack), ETL fk-check/scd2/transfo-closure-CTE, the
-#            multimodal hash/header pair, and stratified sampling.
-#            + 2 re-attestations whose CODE changed this round
-#            (q_llm_cluster_assign and q_llm_semantic_dedup: the
-#            nearest-centroid argmin was rewritten from a
-#            Window.partitionBy(vec_id) row_number — which shuffles
-#            all n·k scored rows into WindowExec — to a map-side
-#            packed-BIGINT-key min groupBy aggregate with partial
-#            aggregation before the exchange; same round-6dp +
-#            centroid-id tiebreak, verified locally bit-identical via
-#            tools/check.py + an equivalence test before this window
-#            was cut). q_llm_lsh_recall's default-no-op sample_frac
-#            parameterization, q_mm_feature_extract's real-BMP
-#            decoder routing, and the _pq_codes packed-ordering-key
-#            rewrite (q_llm_pq_encode / q_llm_knn_pq /
-#            q_llm_knn_pq_refine — the TIMING gate's second
-#            SortAggregate find) also land this round but lose the
-#            slot race (48 forced + 2 code-changed = 50); all five are
-#            tools/check.py-verified green this round (PQ trio also at
-#            13-thread parallelism) and LEAD the round-11 window
-#            (their existing rows attest superseded code).
-#   round 11 (this window): consolidation by arithmetic — zero free
-#            slots. The staleness invariant (max_round−4, with
-#            CORRECTNESS_r10 on disk) enumerates exactly 50 keys whose
-#            newest row is round 6; all 50 ARE this window, in the
-#            invariant's own enumeration order. Critically the stratum
-#            contains 4 of the 5 keys whose CODE changed in round 10
-#            on only an r6 hash (q_mm_feature_extract — now the
-#            four-branch stub/BMP/P6/WAV union after this round's WAV
-#            PCM codec; the PQ trio q_llm_pq_encode / q_llm_knn_pq /
-#            q_llm_knn_pq_refine on the packed-ordering-key rewrite)
-#            plus q_llm_kmeans_fix, whose assignment stage is migrated
-#            THIS round (with q_llm_kmeans_step, not in any window)
-#            from the retired Window.partitionBy(vec_id) row_number
-#            argmin onto the packed-BIGINT nearest_centroid_assign —
-#            so the migration attests in its birth round.
-#            Round-12 slot ledger (r7 stratum = 47 forced, 3 free):
-#            the free slots go to q_llm_kmeans_step (r11 argmin
-#            migration on a stale hash), q_llm_lsh_recall (r10
-#            sample_frac parameterization), and q_llm_cluster_assign
-#            (the r11 cid-value guard touched shared
-#            nearest_centroid_assign code). q_llm_semantic_dedup — the
-#            guard's other consumer, equivalence-tested and locally
-#            check.py-green on current code — waits one round and
-#            LEADS round 13 (r8 stratum = 48, two free slots).
-#   round 12: third consolidation by arithmetic — zero
-#            discretionary slots. The staleness invariant (max_round−4
-#            with CORRECTNESS_r11 on disk) enumerates exactly the 47
-#            r7-attested keys below, in its own enumeration order; the
-#            3 ledgered slots from the r11 comment above fill the rest
-#            (q_llm_kmeans_step / q_llm_lsh_recall /
-#            q_llm_cluster_assign — the keys whose newest driver hash
-#            attests superseded code after the r10/r11 changes).
-#            Round-13 slot ledger (r8 stratum = 48 forced, 2 free):
-#            slot 1 is RESERVED for q_llm_semantic_dedup — after this
-#            window it is the last pre-r12 key whose hash (r10) trails
-#            its code (the r11 cid-guard touch); slot 2 goes to
-#            q_mm_frame_sample, whose real branch turned
-#            keyframe-aware in round 12 (stss/ctts in the BMFF walk,
-#            verdict item 3) on an r11 hash — birth-round attestation
-#            for the new sampling semantics.
-#            Round-14 ledger (carried debt, deliberate): migrate
-#            kmeans_fixpoint/q_llm_kmeans_fix onto the measured
-#            assign-then-rejoin spelling q_llm_kmeans_step ships since
-#            r12 (SCALE.md §20) and attest at birth — it waits because
-#            both r13 slots are taken; measure the ReusedExchange
-#            hypothesis (the fixpoint re-joins the identical
-#            e.select(vec_id, vq) exchange each iteration, shareable
-#            across all k iterations) before switching.
-#   round 13 (this window): fourth consolidation by arithmetic — zero
-#            discretionary slots. The staleness invariant (max_round−4
-#            with CORRECTNESS_r12 on disk) enumerates exactly the 48
-#            r8-attested keys below, in its own enumeration order; the
-#            2 ledgered slots from the r12 comment above fill the rest:
-#            q_llm_semantic_dedup (r11 cid-guard touch on an r10 hash —
-#            the last pre-r12 hash-trails-code key) and
-#            q_mm_frame_sample (r12 keyframe/elst/co64/fragmented BMFF
-#            semantics on an r11 hash; r13 also adds sidx-seek support
-#            and the ADVICE r12 malformed-input hardening, so the fresh
-#            hash attests the current walker at birth).
-#            Round-14 ledger (carried debt, unchanged from r12): migrate
-#            kmeans_fixpoint/q_llm_kmeans_fix onto the measured
-#            assign-then-rejoin spelling (SCALE.md §20) and attest at
-#            birth; measure the ReusedExchange hypothesis on the
-#            POST-execution adaptive plan first (AQE reuses stages at
-#            runtime — the pre-execution plan does not show it).
-#   round 14 (this window): fifth consolidation — 46 forced + 4 slots.
-#            The staleness invariant (max_round−4 with CORRECTNESS_r13
-#            on disk) enumerates the 46 r9-attested keys below
-#            (set-ops/subquery/UDF/scan/sink/report/graph/layout
-#            families). The 4 remaining slots: the ledgered
-#            q_llm_kmeans_fix migration (assign-then-rejoin, SCALE.md
-#            §20, bit-exactness asserted); q_mm_frame_sample_range —
-#            a NEW key giving the r13 sidx-seek walker a driver-oracle
-#            hash (r13 verdict item 2) and carrying the ADVICE r13
-#            lower-bound-floor fix + mvex gating at birth;
-#            q_mm_feature_extract (r11 hash trails the r12 odd-PCM
-#            guard — last such key, r13 verdict item 4); and
-#            q_llm_dedup_clusters (ADVICE r13: unpersist superseded
-#            localCheckpoint frames — code changes this round, so it
-#            re-attests at birth rather than opening a new gap).
-#            Round-15 slot ledger (r10 stratum = 48 forced, 2 free):
-#            slot 1 is RESERVED for q_llm_dedup_keep_best — it calls
-#            q_llm_dedup_clusters, so the r14 unpersist fix runs under
-#            its r11 hash until re-attested (locally check.py-green on
-#            current code this round; result-invariant by construction
-#            — the fix only frees superseded executor blocks — but the
-#            semantic_dedup discipline says attest anyway). It cannot
-#            take an r14 slot: the window is exactly full at 46 forced
-#            + the kmeans ledger + 3 mandated discretionary items.
-#   round 15 (this window): sixth consolidation — 48 forced + 2 slots,
-#            exactly the r14-verdict ledger. The staleness invariant
-#            (max_round−4 with CORRECTNESS_r14 on disk) enumerates the
-#            48 r10-attested keys below (reports, agg tails, join/
-#            window heads, fn family, LLM heads, stream batch-twins,
-#            set-op heads, ETL, samplers, mm header/hash). Slot 1:
-#            the ledgered q_llm_dedup_keep_best — the only key whose
-#            driver hash (r11) trails its code (it calls
-#            q_llm_dedup_clusters, whose loop gained the r14 unpersist
-#            fix). Slot 2: q_scan_python_datasource — re-attested over
-#            the round-15 partitioned DataSourceStreamReader work (the
-#            demo source family gains SeqPartSource; the query now
-#            reads BOTH formats union-tagged, so the r15 hash covers
-#            the new source's batch side at birth).
-#            Round-16 slot ledger (r11 stratum = 46 forced after this
-#            round re-attests the r11-stratum q_llm_dedup_keep_best,
-#            so 4 free): slot 1 RESERVED for q_llm_semantic_dedup and
-#            slot 2 for q_er_resolve — apply functions/iterate.py's
-#            checkpoint-block freeing to analytics.cc_fixpoint in the
-#            SAME commit (deferred from r14 precisely because those
-#            two consumers' hashes — r13 and r12 — would otherwise
-#            trail the code; with both in the r16 window the fix and
-#            its fresh attestations land together). Slot 3 RESERVED
-#            for q_mm_tiff_decode — registered this round (r15) AFTER
-#            the window froze at 48 forced + 2 mandated slots, so per
-#            the round-6→7 precedent it takes its first driver row in
-#            r16 (locally check.py-green at sf0.01 at birth). Slot 4
-#            RESERVED for q_mm_frame_sample_range — the ADVICE r14 #1
-#            exclusive-end sidx lower bound lands this round under its
-#            r14 hash; the change is result-invariant on matching
-#            timescales (the new predicate keeps a SUPERSET of
-#            fragments and the per-sample pts filter discards the
-#            extras — re-asserted by test_round15_ops and a 3/3
-#            check.py pass on the mm keys), but the attest-anyway
-#            discipline applies.
-#            Round-17 pre-registration ledger: the round-15 Matroska/
-#            EBML walk (operators/multimodal.py,
-#            q_mm_mkv_frame_sample_range + MKV_FRAME_RANGE_ORACLE) is
-#            fully implemented and locally oracle-green
-#            (tests/test_round15_mkv.py runs the DuckDB oracle and
-#            value-compares) but CANNOT register in r15: this window
-#            froze at 48 forced + 2 mandated slots, and r16 is already
-#            arithmetic-full (46 forced + the 4 reserved slots above),
-#            so a key born r15 could not take its one-round-grace
-#            slot. Plan: REGISTER it in r16 (add @register(...,
-#            oracle=MKV_FRAME_RANGE_ORACLE) plus the POST_FREEZE_LEDGER
-#            entry {"q_mm_mkv_frame_sample_range": 16}); it then takes
-#            r17's single free slot (the r12 stratum shrinks to 49
-#            forced once r16 re-attests q_er_resolve, leaving exactly
-#            1 slot).
-#   round 16 (this window): seventh consolidation — exactly the
-#            r15-verdict ledger, 46 forced + 4 reserved slots. The
-#            staleness invariant (max_round−4 with CORRECTNESS_r15 on
-#            disk) enumerates the 46 r11-attested keys below. Slot 1:
-#            q_llm_semantic_dedup and slot 2: q_er_resolve — BOTH
-#            cc_fixpoint consumers, re-attested in the same commit
-#            that applies functions/iterate.py's
-#            unpersist_local_checkpoint inside the cc_fixpoint loop
-#            (analytics.py — superseded rounds + sym freed; the fix is
-#            result-invariant by construction, it only frees executor
-#            blocks of frames the loop has replaced, but the
-#            attest-anyway discipline applies and was the reason the
-#            fix waited for this window). Slot 3: q_mm_tiff_decode —
-#            clearing the never-attested grace (POST_FREEZE_LEDGER
-#            r15; judge-verified green at sf0.01 in the r15 session).
-#            Slot 4: q_mm_frame_sample_range — the r15 exclusive-end
-#            sidx lower bound lands under its r14 hash; fresh hash
-#            covers the current walker.
-#            Round-17 slot ledger (r12 stratum): with r16 re-attesting
-#            q_er_resolve (r12-attested) the r12 stratum shrinks to 49
-#            forced, leaving exactly 1 free slot — RESERVED for
-#            q_mm_mkv_frame_sample_range, registered THIS round (r16,
-#            post-freeze by the arithmetic above, POST_FREEZE_LEDGER
-#            entry {"q_mm_mkv_frame_sample_range": 16}, grace expires
-#            when CORRECTNESS_r16 lands).
-#   round 17 (this window): eighth consolidation — exactly the
-#            r16-verdict ledger, 49 forced + 1 reserved slot. The
-#            staleness invariant (max_round−4 with CORRECTNESS_r16 on
-#            disk) enumerates the 49 r12-attested keys below
-#            (relational/filter heads, agg core, join family, window
-#            heads, fn family, kmeans pair, event analytics, profile/
-#            audit, LSH recall — the r12 stratum verbatim). Slot 50:
-#            q_mm_mkv_frame_sample_range — registered r16 post-freeze
-#            (POST_FREEZE_LEDGER {"q_mm_mkv_frame_sample_range": 16});
-#            its one-round grace expired when CORRECTNESS_r16 landed,
-#            and this is the reserved birth-hash slot the r16 ledger
-#            spelled out. Judge ran it green at sf0.01 in the r16
-#            session; the driver hash lands here.
-#            KNOWN GAP, ledgered per the r16 verdict (What's-wrong 1):
-#            q_graph_cc's newest driver hash is r14, which PREDATES the
-#            r16 cc_fixpoint storage-hygiene change
-#            (functions/iterate.py's unpersist_local_checkpoint applied
-#            inside analytics.cc_fixpoint). The r16 window re-attested
-#            two of the loop's three registered consumers
-#            (q_llm_semantic_dedup, q_er_resolve) in the fix's commit,
-#            but q_graph_cc (analytics.py, the third consumer) was
-#            missed by that ledger. The change is result-invariant by
-#            construction (frees only superseded checkpoint blocks) and
-#            equivalence-pinned in tests/test_round16_ops.py against a
-#            driver-side union-find; the r16 judge also ran q_graph_cc
-#            green. By the attest-anyway discipline it is nonetheless
-#            `weak` until a fresh driver hash. The r17 window is
-#            arithmetic-full (49 forced + 1 reserved), so the gap
-#            closes next round — and NOT by staleness arithmetic
-#            alone: once CORRECTNESS_r17 lands, max_round=17 forces
-#            the ≤13 stratum (48 keys, recomputed from the committed
-#            artifacts), while q_graph_cc's r14 row is only forced at
-#            r19. Therefore the r18 slot ledger below is MANDATORY,
-#            not advisory. If any r17 slot unexpectedly frees, spend
-#            it on q_graph_cc first.
-#            Round-18 slot ledger: 48 forced r13-stratum keys + slot 1
-#            RESERVED for q_graph_cc (the hash-trails-code gap above —
-#            one round earlier than staleness would force it) + slot 2
-#            free for a key registered in r17 under POST_FREEZE_LEDGER
-#            or, if none, for the oldest r14-stratum key.
-#   round 18 (this window): ninth consolidation — exactly the
-#            r17-verdict ledger. The staleness invariant (max_round−4
-#            with CORRECTNESS_r17 on disk) enumerates the 48
-#            r13-attested keys below (fn/sort/limit heads, JDBC
-#            round-trip, the r13 LLM text/vector block, TPC-H-style
-#            business queries, the ETL pose/calibration family,
-#            sample/reshape/profile, binary stats + frame sample, the
-#            r13 agg sketches, winnowing pair, time-series family —
-#            the r13 stratum verbatim, enumeration order preserved).
-#            Slot 49: q_graph_cc — the MANDATORY ledger slot from r17
-#            (its r14 hash trailed the r16 cc_fixpoint change; this
-#            birth-fresh hash closes What's-wrong 1 one round before
-#            staleness arithmetic would force it). Slot 50:
-#            q_llm_warc_extract — registered r17 post-freeze
-#            (POST_FREEZE_LEDGER {"q_llm_warc_extract": 17}); its
-#            one-round grace expired when CORRECTNESS_r17 landed and
-#            this is the reserved birth-hash slot. Judge ran it green
-#            at sf0.01 (84 rows) in the r17 session.
-#            Round-19 slot ledger: once CORRECTNESS_r18 lands,
-#            max_round=18 forces the ≤14 stratum. Recomputed from the
-#            committed artifacts with this window re-attested at 18:
-#            the r14 stratum is 47 keys (48 currently-r14 keys minus
-#            q_graph_cc, re-attested here), leaving exactly THREE free
-#            slots — spend them on keys registered this round under
-#            POST_FREEZE_LEDGER (birth attestations), oldest-first
-#            r15-stratum keys if any ledger entry slips.
-#   Steady state: birth-round attestation for new queries +
-#            oldest-first rotation keeps every green ≤ 4 rounds old.
 DRIVER_WINDOW = 50
+# A query whose newest green driver row is this many rounds behind the
+# newest CORRECTNESS file is forced into the window, so no attestation is
+# ever more than HARD_STALE + 1 rounds old.
+HARD_STALE = 5
 
-# Keys registered AFTER their round's window froze arithmetic-full, with
-# the round being built when they were registered. The birth-attestation
-# invariant (test_registry.py::test_window_contains_every_never_attested_
-# query) grants exactly ONE round of grace — once CORRECTNESS_r<round>
-# lands, the test fails until the key takes a window slot (mirroring the
-# staleness forcing function, which cannot see never-attested keys).
-# (q_mm_tiff_decode's r15 entry cleared: it took r16 window slot 3.
-# q_mm_mkv_frame_sample_range's r16 entry cleared: it took r17 window
-# slot 50. q_llm_warc_extract's r17 entry cleared: it takes r18 window
-# slot 50 — the reserved grace slot the r17 ledger spelled out.)
-# Keys registered THIS round (r18) after the window froze at the
-# mandated 48+2 composition go here with value 18; their grace expires
-# when CORRECTNESS_r18 lands and they take r19's three free slots per
-# the round-19 slot ledger above (47 forced r14-stratum keys + 3).
-# Registered r18 (operators/warc.py) AFTER this round's window froze at
-# the mandated 48+2 composition — the crawl→curate story's three
-# compositions: q_llm_warc_to_documents (r17 verdict item 2),
-# q_llm_warc_links (host-level link graph), q_llm_url_normalize
-# (frontier URL canonicalization). Exactly as many keys as r19 has free
-# slots (47 forced r14-stratum keys + 3); their grace expires when
-# CORRECTNESS_r18 lands and they take those slots.
-POST_FREEZE_LEDGER: dict[str, int] = {}
-# (r18's three entries cleared: q_llm_warc_to_documents, q_llm_warc_links
-# and q_llm_url_normalize take r19 window slots 48-50 below, exactly the
-# three free slots the round-19 ledger reserved for them. No key was
-# registered post-freeze in r19 — an optimization round adds no queries.)
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+# Fingerprint of every attested query at its newest green row, written by
+# tools/record_attestations.py.
+ATTESTATIONS_FILE = os.path.join(_ROOT, "ATTESTATIONS.json")
 
-_PRIORITY: list[str] = [
-    # --- round-19 window: the 47 r14-attested keys forced by the
-    # staleness invariant (test_registry.py::
-    # test_window_contains_every_stale_attestation with
-    # CORRECTNESS_r18 on disk; enumeration order preserved) ---
-    "q_llm_dedup_clusters",
-    "q_set_intersect",
-    "q_set_except",
-    "q_set_intersect_all",
-    "q_set_except_all",
-    "q_subquery_scalar",
-    "q_subquery_in",
-    "q_subquery_corr_agg",
-    "q_subquery_exists_range",
-    "q_udf_python",
-    "q_udf_pandas",
-    "q_udaf_pandas",
-    "q_udtf_applyinpandas",
-    "q_udtf_python",
-    "q_udf_cogrouped",
-    "q_udf_sql",
-    "q_scan_parquet",
-    "q_scan_csv",
-    "q_scan_json",
-    "q_sink_parquet_partitioned",
-    "q_sink_orc_roundtrip",
-    "q_scan_binaryfile",
-    "q_topk_global",
-    "q_llm_knn_ivf",
-    "q_llm_knn_batch",
-    "q_llm_hard_negatives",
-    "q_llm_embed_quant",
-    "q_llm_lm_score",
-    "q_priority_linestatus",
-    "q_order_count_distribution",
-    "q_small_qty_revenue",
-    "q_disjunctive_revenue",
-    "q_idle_customer_balance",
-    "q_win_nth_value",
-    "q_etl_sessionize",
-    "q_etl_snapshot_diff",
-    "q_sample_weighted",
-    "q_join_skew_salted",
-    "q_join_null_safe",
-    "q_mm_feature_extract",
-    "q_llm_kmeans_fix",
-    "q_graph_triangles",
-    "q_graph_sssp",
-    "q_agg_heavy_hitters",
-    "q_graph_kcore",
-    "q_layout_bucketed_join",
-    "q_layout_partition_pruning",
-    # --- slots 48-50 (r18 ledger, MANDATORY): birth-hash slots for
-    # the three WARC/crawl compositions registered r18 post-freeze;
-    # their POST_FREEZE_LEDGER grace expired when CORRECTNESS_r18
-    # landed ---
-    "q_llm_warc_to_documents",
-    "q_llm_warc_links",
-    "q_llm_url_normalize",
-]
 
+def green_rounds() -> tuple[dict[str, int], int]:
+    """Newest round with a green (hash-matching) driver row per query, and
+    the newest committed CORRECTNESS round."""
+    latest: dict[str, int] = {}
+    max_round = 0
+    for path in glob.glob(os.path.join(_ROOT, "CORRECTNESS_r*.json")):
+        rnd = int(re.search(r"_r(\d+)\.json$", path).group(1))
+        max_round = max(max_round, rnd)
+        with open(path) as fh:
+            rows = json.load(fh)
+        for name, row in rows.items():
+            if row.get("hash_match") is True and rnd > latest.get(name, 0):
+                latest[name] = rnd
+    return latest, max_round
+
+
+def order_window(
+    names: list[str],
+    latest: dict[str, int],
+    max_round: int,
+    recorded: dict[str, str],
+    current: dict[str, str],
+    size: int = DRIVER_WINDOW,
+) -> list[str]:
+    """The ``size`` names of ``names`` (registration order) the driver
+    should check next; see ``derive_window`` for the rules."""
+    pos = {n: i for i, n in enumerate(names)}
+
+    def stalest_first(group):
+        return sorted(group, key=lambda n: (latest[n], pos[n]))
+
+    never = [n for n in names if n not in latest]
+    hard = stalest_first(
+        n for n in names if n in latest and latest[n] <= max_round - HARD_STALE
+    )
+    if len(never) + len(hard) > size:
+        raise RuntimeError(
+            f"{len(never)} never-attested and {len(hard)} hard-stale queries "
+            f"do not fit the {size}-query driver window"
+        )
+    rest = [n for n in names if n in latest and latest[n] > max_round - HARD_STALE]
+    touched = [n for n in rest if recorded.get(n) != current[n]]
+    untouched = [n for n in rest if recorded.get(n) == current[n]]
+    return (never + hard + stalest_first(touched) + stalest_first(untouched))[:size]
+
+
+@functools.cache
+def derive_window() -> tuple[str, ...]:
+    """The oracle-backed queries that lead ``queries()``.
+
+    The driver value-checks only the first ``DRIVER_WINDOW`` entries of
+    ``queries()`` each round, so the head of the registry decides which
+    queries get a fresh attestation. The window is derived from the
+    committed ``CORRECTNESS_r*.json`` rows (green rows only) and
+    ``ATTESTATIONS.json``, in four groups:
+
+    1. never attested;
+    2. hard-stale: newest green row ≤ newest round − ``HARD_STALE``;
+    3. touched: the reachable source or the oracle changed since the
+       newest green row (fingerprint differs from the recorded one);
+    4. everything else, stalest first.
+
+    Groups 2–4 are ordered stalest first, ties in registration order.
+    The two hard rules come first so that a burst of touched queries can
+    never push an attestation past the staleness bound; if they alone
+    overflow the window, this raises instead of silently breaking it.
+    Fingerprints are computed once per process, on first use.
+    """
+    from micmac_li3ds_spark.fingerprint import fingerprints
+
+    _ensure_loaded()
+    latest, max_round = green_rounds()
+    with open(ATTESTATIONS_FILE) as fh:
+        recorded = {
+            n: e["fingerprint"] for n, e in json.load(fh)["queries"].items()
+        }
+    regs = {n: q for n, q in _REGISTRY.items() if q.oracle is not None}
+    current = fingerprints({n: (q.fn, q.oracle) for n, q in regs.items()}, _ROOT)
+    return tuple(order_window(list(regs), latest, max_round, recorded, current))
 
 
 def _ordered(regs: dict[str, Query]) -> dict[str, Query]:
-    """Priority entries first (driver-checked window), then the rest in
-    registration order."""
-    out: dict[str, Query] = {}
-    for name in _PRIORITY:
-        out[name] = regs[name]
-    for name, q in regs.items():
-        if name not in out:
-            out[name] = q
-    return out
+    """The driver window first, then the rest in registration order."""
+    window = derive_window()
+    return {
+        **{n: regs[n] for n in window},
+        **{n: q for n, q in regs.items() if n not in window},
+    }
 
 
 def register(name: str, oracle: Optional[str] = None, tags: tuple = ()):

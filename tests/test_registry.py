@@ -2,12 +2,16 @@
 
 The driver's CORRECTNESS pass checks only the first ``DRIVER_WINDOW``
 entries of ``queries()`` (observed in round 1: exactly the first 50
-registry entries got a row). These tests pin the properties that make
-that window worth its slots:
+registry entries got a row). ``registry.derive_window()`` picks those
+entries from the committed attestations. These tests pin the properties
+that make that window worth its slots:
 
-* every windowed query has a full value-hash oracle (a no-oracle entry
-  would waste a slot on a weaker rows-only check);
-* the priority list contains no typos (every name is registered);
+* the window is 50 distinct registered, oracle-backed queries and leads
+  ``queries()``;
+* never-attested and hard-stale queries are always in it, and a query
+  whose reachable source changed since its newest green row moves ahead
+  of untouched ones;
+* ``ATTESTATIONS.json`` is refreshed whenever a CORRECTNESS file lands;
 * no oracle-backed query emits array/map-typed columns — the driver's
   pandas canonicalizer crashes on list cells (CORRECTNESS_r01:
   ``TypeError: unhashable type: 'list'`` for q_agg_collect, q_fn_string,
@@ -39,21 +43,19 @@ def test_readme_counts_match_registry():
     assert int(m.group(2)) == sum(1 for q in regs.values() if q.oracle)
 
 
-def test_priority_names_all_registered():
-    regs = R.registry()
-    missing = [n for n in R._PRIORITY if n not in regs]
-    assert not missing, f"priority list has unregistered names: {missing}"
+def test_window_names_registered_and_distinct():
+    window = R.derive_window()
+    assert len(window) == len(set(window)) == R.DRIVER_WINDOW
+    assert set(window) <= set(R.registry())
 
 
-def test_priority_fills_driver_window_exactly():
-    assert len(R._PRIORITY) == R.DRIVER_WINDOW
-    names = list(R.all_queries())
-    assert names[: R.DRIVER_WINDOW] == R._PRIORITY
+def test_window_leads_driver_queries():
+    assert list(R.all_queries())[: R.DRIVER_WINDOW] == list(R.derive_window())
 
 
 def test_windowed_queries_all_have_oracles():
     regs = R.registry()
-    no_oracle = [n for n in R._PRIORITY if regs[n].oracle is None]
+    no_oracle = [n for n in R.derive_window() if regs[n].oracle is None]
     assert not no_oracle, f"windowed queries without oracles: {no_oracle}"
 
 
@@ -172,63 +174,134 @@ def test_timing_artifact_clean():
     assert d["n_queries"] >= 200
 
 
-def _latest_attestations():
-    import glob
-    import json
-    import os
-    import re
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    latest = {}
-    max_round = 0
-    for f in sorted(glob.glob(os.path.join(repo, "CORRECTNESS_r*.json"))):
-        rnd = int(re.search(r"_r(\d+)", f).group(1))
-        max_round = max(max_round, rnd)
-        for k in json.load(open(f)):
-            latest[k] = rnd
-    return latest, max_round
-
-
 def test_window_contains_every_never_attested_query():
-    """Birth-round attestation, mechanized: a registered query with NO
-    driver CORRECTNESS row yet must occupy a window slot — this is the
-    invariant whose absence let six round-8 additions silently drop
-    out of the window when a killed shell ate the list edits.
-
-    One mechanized exception (round 15, codifying the round-6→7
-    precedent): a key registered AFTER its round's window froze
-    arithmetic-full may sit out exactly ONE round, by declaring itself
-    in registry.POST_FREEZE_LEDGER with the round being built. The
-    grace expires the moment that round's CORRECTNESS file lands —
-    from then on this test fails until the key takes a window slot,
-    the same forcing-function shape as the staleness test below
-    (never-attested keys never enter ``latest``, so that test can
-    never force them; this one must)."""
-    latest, max_round = _latest_attestations()
-    missing = [
-        n
-        for n in R.registry()
-        if n not in latest
-        and n not in R._PRIORITY
-        and R.POST_FREEZE_LEDGER.get(n) != max_round + 1
-    ]
+    """Birth-round attestation: a registered query with no green driver
+    row yet must occupy a window slot."""
+    latest, _ = R.green_rounds()
+    window = R.derive_window()
+    missing = [n for n in R.registry() if n not in latest and n not in window]
     assert not missing, f"never-attested queries outside the window: {missing}"
 
 
 def test_window_contains_every_stale_attestation():
-    """Oldest-first rotation, mechanized: any query whose newest driver
-    row is ≥ 4 rounds behind the newest committed CORRECTNESS round
-    must be in the current window. Tightened from −5 in round 9 (r8
-    verdict): at −5 the invariant only tripped AFTER the breaching
-    CORRECTNESS file landed — one round too late to shape the window
-    it polices. At −4 the keys that WOULD become 5 rounds stale next
-    round are forced into the window while the previous round's file
-    is still the newest — proactive, not post-hoc."""
-    latest, max_round = _latest_attestations()
-    stale = [
+    """Oldest-first rotation: any query whose newest green driver row is
+    ``HARD_STALE`` (5) or more rounds behind the newest CORRECTNESS file
+    must be in the current window, so no attestation gets older than six
+    rounds."""
+    latest, max_round = R.green_rounds()
+    regs = R.registry()
+    window = R.derive_window()
+    out = [
         n
         for n, rnd in latest.items()
-        if rnd <= max_round - 4 and n in R.registry()
+        if rnd <= max_round - R.HARD_STALE and n in regs and n not in window
     ]
-    out = [n for n in stale if n not in R._PRIORITY]
     assert not out, f"stale-attested queries left out of the window: {out}"
+
+
+def test_attestations_file_covers_every_attested_query():
+    """ATTESTATIONS.json must hold a fingerprint for every attested query
+    at its newest green round. Fails as soon as a new CORRECTNESS file
+    lands, until ``python tools/record_attestations.py`` is re-run."""
+    import json
+
+    latest, max_round = R.green_rounds()
+    with open(R.ATTESTATIONS_FILE) as fh:
+        doc = json.load(fh)
+    assert doc["round"] == max_round
+    regs = R.registry()
+    behind = {
+        n: (doc["queries"].get(n, {}).get("round"), rnd)
+        for n, rnd in latest.items()
+        if n in regs and doc["queries"].get(n, {}).get("round") != rnd
+    }
+    assert not behind, f"recorded vs newest green round: {behind}"
+
+
+_SYNTH_QUERIES = """
+from synthpkg import helpers
+from synthpkg.helpers import shared
+
+
+def q_stale(spark, sf_dir):
+    return 0
+
+
+def q_old(spark, sf_dir):
+    return 1
+
+
+def q_plain(spark, sf_dir):
+    return 2
+
+
+def q_a(spark, sf_dir):
+    return shared(3)
+
+
+def q_b(spark, sf_dir):
+    return _via(4)
+
+
+def _via(x):
+    return helpers.shared(x) + 1
+"""
+_SYNTH_NAMES = ["q_stale", "q_old", "q_plain", "q_a", "q_b"]
+
+
+def _synth_fingerprints(root, helper_src: str) -> dict[str, str]:
+    """Fingerprints of a throwaway package ``synthpkg`` written under
+    ``root``, whose oracles embed ``root`` like the fixture oracles do."""
+    import importlib
+    import sys
+
+    from micmac_li3ds_spark.fingerprint import fingerprints
+
+    pkg = root / "synthpkg"
+    pkg.mkdir(parents=True)
+    (pkg / "__init__.py").write_text("")
+    (pkg / "helpers.py").write_text(helper_src)
+    (pkg / "queries.py").write_text(_SYNTH_QUERIES)
+
+    def purge():
+        for m in [m for m in sys.modules if m.split(".")[0] == "synthpkg"]:
+            del sys.modules[m]
+
+    purge()
+    importlib.invalidate_caches()
+    sys.path.insert(0, str(root))
+    try:
+        mod = importlib.import_module("synthpkg.queries")
+    finally:
+        sys.path.remove(str(root))
+        purge()
+    oracle = f"SELECT * FROM read_parquet('{root}/fixtures/t.parquet')"
+    return fingerprints(
+        {n: (getattr(mod, n), oracle) for n in _SYNTH_NAMES},
+        str(root),
+        package="synthpkg",
+    )
+
+
+def test_touched_helper_pulls_its_consumers_ahead(tmp_path):
+    before = _synth_fingerprints(tmp_path / "v1", "def shared(x):\n    return x\n")
+    after = _synth_fingerprints(tmp_path / "v2", "def shared(x):\n    return 2 * x\n")
+    assert {n for n in _SYNTH_NAMES if after[n] != before[n]} == {"q_a", "q_b"}
+
+    latest = {"q_stale": 4, "q_old": 7, "q_plain": 8, "q_a": 9, "q_b": 9}
+    untouched = R.order_window(_SYNTH_NAMES, latest, 9, before, before, size=5)
+    assert untouched == ["q_stale", "q_old", "q_plain", "q_a", "q_b"]
+    # the consumers jump the older untouched queries, but not the
+    # hard-stale one, and the untouched queries keep their order
+    edited = R.order_window(_SYNTH_NAMES, latest, 9, before, after, size=5)
+    assert edited == ["q_stale", "q_a", "q_b", "q_old", "q_plain"]
+
+    with pytest.raises(RuntimeError):
+        R.order_window(_SYNTH_NAMES, {"q_a": 1}, 9, before, after, size=4)
+
+
+def test_fingerprint_independent_of_repo_root(tmp_path):
+    src = "def shared(x):\n    return x\n"
+    here = _synth_fingerprints(tmp_path / "one", src)
+    moved = _synth_fingerprints(tmp_path / "elsewhere" / "two", src)
+    assert here == moved

@@ -8,10 +8,8 @@
    from test_round14_ops (r15 verdict item 3: global counts are
    suite-order-dependent under a shared session).
 
-2. Registration of q_mm_mkv_frame_sample_range (r15-verdict ledger):
-   the key is now visible to the driver with its DuckDB oracle, in
-   POST_FREEZE_LEDGER for round 16, and NOT in the r16 window (which
-   froze arithmetic-full before the key existed).
+2. Registration of q_mm_mkv_frame_sample_range: the key is visible to
+   the driver with its DuckDB oracle and has a driver row.
 """
 
 from pyspark.sql import functions as F  # noqa: F401
@@ -133,7 +131,7 @@ def test_pagerank_loops_do_not_accumulate_checkpoint_blocks(spark, sf_dir):
     assert len(created_f) == 1
 
 
-def test_mkv_key_registered_with_oracle_and_ledgered():
+def test_mkv_key_registered_with_oracle_and_attested():
     from micmac_li3ds_spark import registry as R
     from micmac_li3ds_spark.operators.multimodal import (
         MKV_FRAME_RANGE_ORACLE,
@@ -142,22 +140,5 @@ def test_mkv_key_registered_with_oracle_and_ledgered():
     reg = R.registry()
     assert "q_mm_mkv_frame_sample_range" in reg
     assert reg["q_mm_mkv_frame_sample_range"].oracle == MKV_FRAME_RANGE_ORACLE
-    # r16 pinned the post-freeze grace state (ledger entry == 16, key
-    # NOT in the frozen window); the r17 rotation retired the grace by
-    # giving the key its reserved window slot and clearing the ledger
-    # entry (the tiff precedent). From r18 on the key rotates like any
-    # other — the durable end state is: ledger entry gone, AND either
-    # a window slot (its attestation round) or a committed driver
-    # attestation proving the grace was honored
-    assert "q_mm_mkv_frame_sample_range" not in R.POST_FREEZE_LEDGER
-    import glob as _glob
-    import json as _json
-
-    attested = set()
-    for f in _glob.glob("CORRECTNESS_r*.json"):
-        d = _json.load(open(f))
-        attested |= set(d.get("queries", d))
-    assert (
-        "q_mm_mkv_frame_sample_range" in R._PRIORITY
-        or "q_mm_mkv_frame_sample_range" in attested
-    )
+    latest, _ = R.green_rounds()
+    assert "q_mm_mkv_frame_sample_range" in latest

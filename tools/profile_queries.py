@@ -1,15 +1,15 @@
-"""Round-18 optimization profiler.
+"""Optimization profiler.
 
 For each named query (default: bench HEADLINE + EXTENDED):
-  * capture ``explain("formatted")`` to plans/r18/<name>_<tag>.txt
+  * capture ``explain("formatted")`` to <plans>/<name>_<tag>.txt
   * time the computation with the noop sink (guide §1.4) — separates
     engine compute from the bench's collect()-to-Python cost
   * time the bench action (collect) for comparability
 Prints one summary line per query and a JSON blob at the end.
 
 Usage:
-    python tools/profile_r18.py [--sf DIR] [--runs N] [--tag before]
-                                [--no-plans] [query ...]
+    python tools/profile_queries.py --plans DIR [--sf DIR] [--runs N]
+                                    [--tag before] [--no-plans] [query ...]
 """
 
 from __future__ import annotations
@@ -45,6 +45,7 @@ EXTENDED = [
 
 def main() -> None:
     ap = argparse.ArgumentParser()
+    ap.add_argument("--plans", required=True, help="directory for the captured plans")
     ap.add_argument("--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     ap.add_argument("--runs", type=int, default=2)
     ap.add_argument("--tag", default="before")
@@ -54,12 +55,10 @@ def main() -> None:
     ap.add_argument("queries", nargs="*")
     args = ap.parse_args()
 
-    plans_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r18"
-    )
+    plans_dir = args.plans
     os.makedirs(plans_dir, exist_ok=True)
 
-    spark = get_spark("profile-r18", cpus=args.cpus, shuffle_partitions=max(args.cpus, 8))
+    spark = get_spark("profile", cpus=args.cpus, shuffle_partitions=max(args.cpus, 8))
     spark.sparkContext.setLogLevel("ERROR")
     reg = registry.registry()
     names = args.queries or (HEADLINE + EXTENDED)

@@ -147,7 +147,8 @@ def main() -> int:
     # of crashing pre-Spark, ADVICE r10)
     load_start = _loadavg()
 
-    spark = get_spark("timing-audit", cpus=32, shuffle_partitions=32)
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    spark = get_spark("timing-audit", cpus=cpus, shuffle_partitions=max(cpus, 8))
     spark.sparkContext.setLogLevel("ERROR")
     regs = registry.registry()
     names = args.queries or list(regs)
@@ -155,9 +156,10 @@ def main() -> int:
     # JVM warmup BEFORE the measured loop: the first measured query
     # otherwise absorbs one-time session costs — codegen/Janino compiler
     # init, broadcast machinery, shuffle system, parquet footer reads.
-    # Round 10 measured that tax at 3–5 s: whatever query leads _PRIORITY
-    # runs first and gets flagged as a false >2× regression purely for its
-    # position (q_llm_cluster_assign read 9.8× while standalone-warm it was
+    # Round 10 measured that tax at 3–5 s: whatever query leads the
+    # driver window (registry.derive_window) runs first and gets flagged
+    # as a false >2× regression purely for its position
+    # (q_llm_cluster_assign read 9.8× while standalone-warm it was
     # FASTER than its baseline). One unmeasured scan+shuffle+broadcast
     # exercise makes per-query times position-independent.
     from pyspark.sql import functions as F  # local: tools-only dep
