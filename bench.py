@@ -1,11 +1,16 @@
-"""Benchmark runner — driver contract.
+"""Benchmark runner — driver contract, and the timing core of the tools.
 
 Runs the headline queries at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE JSON
 line: {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}.
+``$SPARK_GRAFT_CPUS`` defaults to the usable CPU count.
 
 Each query is collected (full materialization). A warm-up run of the
 flagship amortizes JVM/codegen startup out of the per-query numbers.
+
+``tools/timing_audit.py`` and ``tools/profile_queries.py`` import the
+query lists, ``SF_DIR``, ``load_telemetry``, ``warm_up`` and
+``time_query`` from here, so all three harnesses measure the same way.
 """
 
 from __future__ import annotations
@@ -18,7 +23,10 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from micmac_li3ds_spark import registry  # noqa: E402
-from micmac_li3ds_spark.session import get_spark  # noqa: E402
+from micmac_li3ds_spark.session import get_spark, usable_cpus  # noqa: E402
+from micmac_li3ds_spark.tables import TABLES, load  # noqa: E402
+
+SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 # Headline set: one representative per operator family; extended as
 # milestones land. Kept explicit so bench numbers stay comparable
@@ -76,70 +84,73 @@ EXTENDED = [
 ]
 
 
-def _load_telemetry() -> dict:
-    """Ambient-load snapshot (r9 verdict item 6): BENCH_r09 read as a
-    29% regression until an idle re-run disproved it — with 1/5/15-min
-    load averages and the usable-CPU count IN the artifact, a loaded
-    driver run is attributable from the JSON alone."""
+def load_telemetry() -> dict:
+    """Ambient-load snapshot: 1/5/15-min load averages and the usable-CPU
+    count, so a run on a loaded host is attributable from the artifact
+    alone (BENCH_r09 read as a 29% regression until an idle re-run
+    disproved it)."""
     try:
         la = [round(x, 2) for x in os.getloadavg()]
-    except OSError:  # pragma: no cover - non-POSIX
+    except (OSError, AttributeError):  # pragma: no cover - non-POSIX
         la = None
-    try:
-        ncpu = len(os.sched_getaffinity(0))
-    except AttributeError:  # pragma: no cover - non-Linux
-        ncpu = os.cpu_count()
-    return {"loadavg": la, "cpus_avail": ncpu}
+    return {"loadavg": la, "cpus_avail": usable_cpus()}
+
+
+def warm_up(spark, sf: str) -> None:
+    """JVM JIT + codegen + parquet footer/listing caches: the flagship
+    query once, then every corpus table once, so per-query numbers
+    measure steady-state engine throughput, not first-contact file
+    listing + reader JIT."""
+    registry.registry()["q_pricing_summary"].fn(spark, sf).collect()
+    for t in TABLES:
+        load(spark, sf, t).count()
+
+
+def collect(df) -> int:
+    """The bench action: full materialization into Python; row count."""
+    return len(df.collect())
+
+
+def noop(df) -> None:
+    """Engine compute only: the noop sink runs every stage but ships no
+    rows to Python."""
+    df.write.format("noop").mode("overwrite").save()
+
+
+def time_query(spark, fn, sf: str, runs: int, action=collect):
+    """``(best, first, rows)`` over ``runs`` timed builds + ``action`` of
+    ``fn(spark, sf)``. Best-of-N: single-run wall-clock on a shared JVM
+    varies ±40% with scheduler noise, so the min is the engine's cost.
+    The cache is cleared before every run: queries that cache
+    intermediates (near-dedup) must rebuild them, or the second run
+    measures a cache hit."""
+    best, first, rows = float("inf"), 0.0, None
+    for run in range(runs):
+        spark.catalog.clearCache()
+        t0 = time.perf_counter()
+        rows = action(fn(spark, sf))
+        elapsed = time.perf_counter() - t0
+        if run == 0:
+            first = elapsed
+        best = min(best, elapsed)
+    return best, first, rows
 
 
 def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    load_start = _load_telemetry()
+    load_start = load_telemetry()
     print(f"# load at start: {load_start}", file=sys.stderr)
-    spark = get_spark("bench", cpus=cpus, shuffle_partitions=max(cpus, 8))
+    spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
     reg = registry.registry()
-    names = [n for n in HEADLINE if n in reg]
+    warm_up(spark, SF_DIR)
 
-    # Warm-up: JVM JIT + codegen + parquet footer/listing caches. Touch
-    # every corpus table once so per-query numbers measure steady-state
-    # engine throughput, not first-contact file listing + reader JIT.
-    reg["q_pricing_summary"].fn(spark, sf_dir).collect()
-    from micmac_li3ds_spark.tables import TABLES, load
-
-    for t in TABLES:
-        load(spark, sf_dir, t).count()
-
-    # Best-of-N per query: single-run wall-clock on a shared local[32]
-    # JVM varies ±40% with scheduler noise; the min of N runs is the
-    # engine's actual cost (standard best-of-N benchmark practice).
-    # Headline group uses N=3 (r9 verdict item 6 — one extra sample
-    # halves the odds a transient load spike survives into the
-    # headline); the pricier extended group stays at N=2.
-    def run_group(group_names, runs=2):
+    def run_group(group_names, runs):
         timings: dict[str, float] = {}
         first_timings: dict[str, float] = {}
         total = 0.0
         first_total = 0.0
         for name in group_names:
-            best, first, n = float("inf"), 0.0, 0
-            for run in range(runs):
-                # queries that cache intermediates (near-dedup) must
-                # rebuild them each run or the second run measures a
-                # cache hit
-                spark.catalog.clearCache()
-                t0 = time.time()
-                df = reg[name].fn(spark, sf_dir)
-                n = (
-                    df.count()
-                    if name.startswith("q_scan")
-                    else len(df.collect())
-                )
-                elapsed = time.time() - t0
-                if run == 0:
-                    first = elapsed
-                best = min(best, elapsed)
+            best, first, n = time_query(spark, reg[name].fn, SF_DIR, runs)
             timings[name] = round(best, 3)
             first_timings[name] = round(first, 3)
             total += best
@@ -150,15 +161,19 @@ def main() -> None:
             )
         return timings, first_timings, total, first_total
 
-    timings, first_timings, total, first_total = run_group(names, runs=3)
-    ext_names = [n for n in EXTENDED if n in reg]
-    ext_timings, ext_first_timings, ext_total, ext_first_total = run_group(
-        ext_names
+    # Headline best-of-3 (one extra sample halves the odds a transient
+    # load spike survives into the headline); the pricier extended
+    # group stays at best-of-2.
+    timings, first_timings, total, first_total = run_group(
+        [n for n in HEADLINE if n in reg], runs=3
     )
-    load_end = _load_telemetry()
+    ext_timings, ext_first_timings, ext_total, ext_first_total = run_group(
+        [n for n in EXTENDED if n in reg], runs=2
+    )
+    load_end = load_telemetry()
     print(f"# load at end: {load_end}", file=sys.stderr)
 
-    sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
+    sf = os.path.basename(SF_DIR.rstrip("/")).replace("sf", "")
     # COMPACT stdout line only (r8 lesson: the all-in-one line outgrew
     # the driver's stdout tail capture and BENCH_r08.json recorded
     # parsed:null). The headline JSON stays short — metric + 22 query
@@ -172,7 +187,7 @@ def main() -> None:
         "value": round(total, 3),
         "unit": "sec",
         "queries": timings,
-        "sf": float(sf) if sf else sf_dir,
+        "sf": float(sf) if sf else SF_DIR,
         # per-query time is min over `runs` timed executions;
         # single-run figures live in the detail file
         "runs": 3,

@@ -1,12 +1,14 @@
 """Source fingerprints of registered queries.
 
-A query's fingerprint hashes the source text of its function and of
-every package function or class it reaches, transitively: through the
+A query's fingerprint hashes the code of its function and of every
+package function or class it reaches, transitively: through the
 names its code (nested code objects included) loads from module globals,
 through package modules it reads attributes of, and through closure
-cells. The query's oracle SQL is hashed too, with the repo root replaced
-by a placeholder, so moving the checkout does not change it. Runtime
-values of module constants are deliberately left out.
+cells. Code means the syntax tree of the source with docstrings
+removed, so editing a docstring or a comment touches no query. The
+query's oracle SQL is hashed too, with the repo root replaced by a
+placeholder, so moving the checkout does not change it. Runtime values
+of module constants are deliberately left out.
 
 Stdlib only: ``tools/record_attestations.py`` loads this file by path to
 fingerprint old trees of the package with the current rules.
@@ -14,13 +16,16 @@ fingerprint old trees of the package with the current rules.
 
 from __future__ import annotations
 
+import ast
 import hashlib
 import inspect
+import textwrap
 import types
 from collections.abc import Callable
 
 PACKAGE = "micmac_li3ds_spark"
 ROOT_PLACEHOLDER = "<repo>"
+_DOC_OWNERS = (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef)
 
 
 def _in_package(obj, package: str) -> bool:
@@ -93,9 +98,23 @@ def _key(obj) -> str:
     return f"{obj.__module__}:{obj.__qualname__}"
 
 
+def _code_text(src: str) -> str:
+    """``ast.dump`` of ``src`` without docstrings: comment, docstring and
+    layout edits leave it unchanged. Source that does not parse on its
+    own (a lambda cut out of a larger expression) is returned as is."""
+    try:
+        tree = ast.parse(textwrap.dedent(src))
+    except SyntaxError:
+        return src
+    for node in ast.walk(tree):
+        if isinstance(node, _DOC_OWNERS) and ast.get_docstring(node, False) is not None:
+            node.body = node.body[1:]
+    return ast.dump(tree)
+
+
 def _source_digest(obj) -> str:
     try:
-        src = inspect.getsource(obj)
+        src = _code_text(inspect.getsource(obj))
     except (OSError, TypeError):  # no source file (exec-generated code)
         src = ""
     return hashlib.sha256(src.encode()).hexdigest()

@@ -13,13 +13,22 @@ import os
 from pyspark.sql import SparkSession
 
 
+def usable_cpus() -> int:
+    """CPUs this process may run on (its affinity mask, not the host's
+    core count, so a pinned container is not oversubscribed)."""
+    try:
+        return len(os.sched_getaffinity(0))
+    except AttributeError:  # pragma: no cover - non-Linux
+        return os.cpu_count() or 1
+
+
 def get_spark(
     app_name: str = "micmac-li3ds-spark",
     cpus: int | None = None,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "4"))
+        cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or usable_cpus())
     if shuffle_partitions is None:
         # Small local corpora: fewer shuffle partitions cut latency; AQE
         # coalesces further. At 100 TB this would be sized to

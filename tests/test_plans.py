@@ -485,6 +485,25 @@ def test_knn_pq_refine_exact_pass_is_shortlist_bounded(spark):
     assert "TakeOrderedAndProject" in p
     assert "CartesianProduct" not in p
 
+    # the query vector rides the shortlist rows: outside the shortlist's
+    # TakeOrderedAndProject, embeddings is scanned once, by the exact
+    # pass itself, not a second time for its own query-vector broadcast
+    df = registry.registry()["q_llm_knn_pq_refine"].fn(spark, SF_DIR)
+
+    def exact_pass_scans(n, top=True):
+        if n.nodeName() == "TakeOrderedAndProject" and not top:
+            return 0
+        own = n.nodeName().startswith("Scan parquet") and (
+            "embeddings.parquet" in n.toString()
+        )
+        kids = n.children()
+        return own + sum(
+            exact_pass_scans(kids.apply(i), False) for i in range(kids.size())
+        )
+
+    root = df._jdf.queryExecution().executedPlan().initialPlan()
+    assert exact_pass_scans(root) == 1
+
 
 @pytest.mark.parametrize(
     "name,max_exchanges",

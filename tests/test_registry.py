@@ -287,6 +287,15 @@ def test_touched_helper_pulls_its_consumers_ahead(tmp_path):
     before = _synth_fingerprints(tmp_path / "v1", "def shared(x):\n    return x\n")
     after = _synth_fingerprints(tmp_path / "v2", "def shared(x):\n    return 2 * x\n")
     assert {n for n in _SYNTH_NAMES if after[n] != before[n]} == {"q_a", "q_b"}
+    # docstring and comment edits are not code edits: the fingerprints,
+    # and so the window, do not move
+    docstring = _synth_fingerprints(
+        tmp_path / "v3", 'def shared(x):\n    """Identity."""\n    return x\n'
+    )
+    comment = _synth_fingerprints(
+        tmp_path / "v4", "def shared(x):\n    # identity\n    return x  # as is\n"
+    )
+    assert docstring == before and comment == before
 
     latest = {"q_stale": 4, "q_old": 7, "q_plain": 8, "q_a": 9, "q_b": 9}
     untouched = R.order_window(_SYNTH_NAMES, latest, 9, before, before, size=5)

@@ -313,47 +313,57 @@ def test_durable_state_sweep_spares_inflight_uncommitted_round(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# ADVICE r9: timing_audit self-overwrite baseline hygiene
+# timing_audit baseline: the newest artifact committed at HEAD, from git
 # ---------------------------------------------------------------------------
 
 
-def test_timing_audit_baseline_resolution_cleans_up():
-    """The self-overwrite fallback returns the HEAD-copy temp path so
-    main() can unlink it (one temp leaked per rerun before), labels it
-    HEAD:<artifact> rather than the temp's path, and — when asked about
-    an untracked artifact with no older sibling — reports the gate
-    disabled with a (None, None, None) triple, not a 'None' that reads
-    like a path."""
-    import os
+def _git(repo, *args):
     import subprocess
 
-    from tools.timing_audit import _REPO, _resolve_self_overwrite_baseline
+    return subprocess.run(
+        ["git", "-C", str(repo), *args], capture_output=True, check=True
+    ).stdout
 
-    # the newest artifact ON DISK may be this round's not-yet-committed
-    # rerun (exactly the mid-round state the fallback exists for), so the
-    # HEAD-copy branch is asserted against the newest GIT-TRACKED artifact
-    tracked = subprocess.run(
-        ["git", "ls-files", "TIMING_r*.json"],
-        cwd=_REPO,
-        capture_output=True,
-        text=True,
-        check=True,
-    ).stdout.split()
-    assert tracked, "no committed TIMING artifact to test against"
-    newest = os.path.join(
-        _REPO, max(tracked, key=lambda p: int(p.split("_r")[1].split(".")[0]))
-    )
-    path, label, tmp = _resolve_self_overwrite_baseline(newest)
-    assert path == tmp and os.path.exists(tmp)
-    assert label == f"HEAD:{os.path.basename(newest)}"
-    os.unlink(tmp)  # the contract main() now honors
 
-    # untracked file → no HEAD copy → falls to the next-newest artifact
-    path2, label2, tmp2 = _resolve_self_overwrite_baseline(
-        "/tmp/definitely_not_tracked.json"
-    )
-    assert tmp2 is None
-    assert path2 is not None and os.path.basename(path2) == label2
+def test_timing_audit_baseline_resolution_cleans_up(tmp_path, monkeypatch):
+    """Resolving the baseline reads HEAD's copy in memory: it leaves no
+    temp file and no change in the checkout behind, labels the baseline
+    with the artifact's name rather than a path, and outside a repo
+    reports the gate disabled as ``(None, {})``, not a 'None' path."""
+    import json
+    import os
+    import tempfile
+
+    from tools.timing_audit import committed_baseline
+
+    repo = tmp_path / "repo"
+    repo.mkdir()
+    _git(repo, "init", "-q")
+    (repo / "TIMING_r3.json").write_text(json.dumps({"queries": {"q": 3.0}}))
+    _git(repo, "add", ".")
+    _git(repo, "-c", "user.name=t", "-c", "user.email=t@t", "commit", "-qm", "x")
+    # the self-overwrite case: the tracked artifact rewritten in place
+    (repo / "TIMING_r3.json").write_text(json.dumps({"queries": {"q": 9.0}}))
+
+    scratch_tmp = tmp_path / "tmp"
+    scratch_tmp.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(scratch_tmp))
+    listing = sorted(os.listdir(repo))
+    status = _git(repo, "status", "--porcelain")
+
+    name, artifact = committed_baseline(str(repo))
+    assert name == "TIMING_r3.json" and os.path.basename(name) == name
+    assert artifact == {"queries": {"q": 3.0}}
+    assert os.listdir(scratch_tmp) == [], "baseline resolution left a temp"
+    assert sorted(os.listdir(repo)) == listing
+    assert _git(repo, "status", "--porcelain") == status
+
+    # no artifact committed / not a repo → gate disabled, no label
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    _git(empty, "init", "-q")
+    assert committed_baseline(str(empty)) == (None, {})
+    assert committed_baseline(str(tmp_path)) == (None, {})  # not a repo
 
 
 # ---------------------------------------------------------------------------

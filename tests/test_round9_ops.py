@@ -283,32 +283,52 @@ def test_kcore_fixed_peels_reach_fixpoint(spark):
 
 
 # ---------------------------------------------------------------------------
-# timing_audit self-overwrite baseline fallback (r8 advice)
+# timing_audit self-overwrite baseline: HEAD's committed copy from git
 
 
-def test_timing_audit_self_overwrite_falls_back_to_git_copy():
-    """When --json targets the newest committed artifact, the baseline
-    must resolve to HEAD's copy of that file (or the next-newest
-    artifact) — never to None (which silently disabled the regression
-    gate and let test_timing_artifact_clean certify a rewritten
-    regressions:{} as clean)."""
+def _git(repo, *args):
+    import subprocess
+
+    return subprocess.run(
+        ["git", "-C", str(repo), *args], capture_output=True, check=True
+    ).stdout
+
+
+def test_timing_audit_self_overwrite_falls_back_to_git_copy(tmp_path):
+    """When --json rewrites the newest committed artifact, the baseline
+    must still be HEAD's copy of that file — never the rewritten one and
+    never None (which silently disabled the regression gate). Rounds
+    compare numerically (r10 after r9); an untracked newer artifact
+    never becomes the baseline."""
     import json
-    import os
+    import re
 
-    from tools.timing_audit import (
-        _artifacts_newest_first,
-        _git_committed_copy,
-        _newest_committed_artifact,
+    from tools.timing_audit import _REPO, committed_baseline
+
+    tracked = [
+        f
+        for f in _git(_REPO, "ls-tree", "--name-only", "HEAD").decode().split()
+        if re.fullmatch(r"TIMING_r\d+\.json", f)
+    ]
+    assert tracked, "no committed TIMING artifact to test against"
+    newest = max(tracked, key=lambda f: int(re.search(r"\d+", f).group()))
+    name, artifact = committed_baseline()
+    assert name == newest
+    assert artifact == json.loads(_git(_REPO, "show", f"HEAD:{newest}"))
+    assert artifact["queries"], "HEAD baseline has no queries map"
+
+    repo = tmp_path / "repo"
+    repo.mkdir()
+    _git(repo, "init", "-q")
+    for rnd in (9, 10):
+        (repo / f"TIMING_r{rnd}.json").write_text(
+            json.dumps({"queries": {"q": float(rnd)}})
+        )
+    _git(repo, "add", ".")
+    _git(repo, "-c", "user.name=t", "-c", "user.email=t@t", "commit", "-qm", "x")
+    (repo / "TIMING_r10.json").write_text(json.dumps({"queries": {"q": 99.0}}))
+    (repo / "TIMING_r11.json").write_text(json.dumps({"queries": {"q": 11.0}}))
+    assert committed_baseline(str(repo)) == (
+        "TIMING_r10.json",
+        {"queries": {"q": 10.0}},
     )
-
-    newest = _newest_committed_artifact()
-    assert newest is not None
-    copy = _git_committed_copy(newest)
-    assert copy is not None and os.path.exists(copy)
-    # HEAD's copy parses and carries the per-query baseline map
-    base = json.load(open(copy))
-    assert base.get("queries"), "HEAD baseline copy has no queries map"
-    # and a non-committed path yields None so the next-newest artifact
-    # takes over (the glob list has at least r8 and r9 by now)
-    assert _git_committed_copy("/tmp/definitely_not_tracked.json") is None
-    assert len(_artifacts_newest_first()) >= 2
