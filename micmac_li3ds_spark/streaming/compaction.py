@@ -6,9 +6,12 @@ written mode=overwrite so a WAL replay is idempotent. On a continuous
 feed that layout is O(batches) in FILE COUNT: a year of 30-second
 micro-batches is ~1M directories per state dir, and every per-batch
 semi-join against the accumulated state must list and plan all of them
-— the classic small-files death q_audit_small_files exists to measure
-(r15 verdict item 4 named this the one scale gap the streaming family
-opened).
+— the classic small-files death q_audit_small_files exists to measure.
+
+The by-batch state protocol the jobs share lives here too:
+``write_batch`` is the one writer of ``<dir>/batch=<k>``,
+``read_floor`` the one retention-horizon rule, ``check_cadence`` the
+one argument check, and ``auto_compact`` the one in-stream fold.
 
 ``compact_state_dir`` folds the committed batch directories (and the
 previous generation, if any) into ONE new generation directory
@@ -18,7 +21,7 @@ DurableLoopState`:
 
   * the generation's rows carry an extra ``src_batch`` column — the
     batch id each row was first written under. This is what keeps the
-    replay-correctness contract exact: ``_read_or_empty(...,
+    replay-correctness contract exact: ``resolve_state(...,
     before_batch=b)`` (state must be STRICTLY EARLIER than the batch
     being processed — the exact-dedup WAL-replay rule) filters the
     generation on ``src_batch < b``, which is bit-identical to the
@@ -35,14 +38,14 @@ DurableLoopState`:
     (k < up_to) and the superseded older generations + markers.
 
 Readers resolve state as: newest committed generation (if any) +
-batch dirs ``k >= up_to`` — see ``resolve_state`` /
-``jobs._read_or_empty``. Everything goes through the Hadoop FileSystem
-API resolved from the state dir's own scheme, so compaction works on
-the object-storage layouts (s3a://, hdfs://) the jobs advertise.
+batch dirs ``k >= up_to`` — see ``resolve_state``. Everything goes
+through the Hadoop FileSystem API resolved from the state dir's own
+scheme, so compaction works on the object-storage layouts (s3a://,
+hdfs://) the jobs advertise.
 
 Concurrency contract: one compactor per state dir at a time — and the
-contract is ENFORCED, not just documented (r16 verdict item 2): every
-fold takes a create-exclusive ``_COMPACT_LEASE`` file for its duration
+contract is ENFORCED, not just documented: every fold takes a
+create-exclusive ``_COMPACT_LEASE`` file for its duration
 (a second compactor fails loudly instead of racing), and ``list_state``
 refuses loudly if it ever finds two commit markers for one generation
 (the observable damage a historical race could have left — ``up_to``
@@ -185,8 +188,24 @@ def resolve_state(
     """Generation-aware accumulated-state read: the newest committed
     generation (rows filtered to ``src_batch < before_batch`` when
     set) unioned with the live batch dirs ``k >= up_to`` (same
-    ``before_batch`` pruning). Declared schema throughout; empty frame
-    of the declared schema when nothing exists yet.
+    ``before_batch`` pruning). Declared schema throughout, never
+    inferred: a dir that does not exist yet (the very first
+    micro-batch of a stream) reads as an empty frame of the declared
+    schema, which still joins.
+
+    ``before_batch`` restricts the read to state first written in
+    batches k < before_batch — REQUIRED whenever a batch's logic reads
+    state it also writes: on a WAL replay the state dir already
+    contains the replayed batch's own previous output, and reading it
+    back would make the replay see itself as history (replayed
+    fingerprints anti-joined against their own prior write → no new
+    rows → the overwrite destroys the batch's first-seen rows).
+
+    Discovery goes through the Hadoop FileSystem API resolved from the
+    state dir's OWN scheme (``list_state``), so object-storage lake
+    layouts (s3a://, hdfs://) list their real state; a driver-local
+    ``os.listdir`` would silently return empty there and every reader
+    would treat real accumulated state as absent.
 
     ``prune_keys`` — a ONE-column DataFrame of the join keys this read
     will be matched against. When the newest generation is BUCKETED on
@@ -201,10 +220,10 @@ def resolve_state(
     is silently skipped when the generation is unbucketed or bucketed
     on a different column.
 
-    ``min_src_batch`` — the READ side of the retention horizon
-    (code-review r18 #1): rows first written before it are excluded
-    (generation rows by ``src_batch``, live dirs by batch id). Jobs
-    with a horizon derive it from their OWN batch id, so a WAL replay
+    ``min_src_batch`` — the READ side of the retention horizon: rows
+    first written before it are excluded (generation rows by
+    ``src_batch``, live dirs by batch id). Jobs with a horizon derive
+    it from their OWN batch id (``read_floor``), so a WAL replay
     reads exactly the window the original run read REGARDLESS of fold
     timing — without this, a fold inside batch b that drops state and
     commits before b's checkpoint would make b's replay recompute
@@ -277,10 +296,10 @@ def _acquire_lease(spark, fs, path: str, owner: "str | None" = None):
     uniquely-named sidecar temp file first and then ``fs.rename``-d to
     the lease name; rename-onto-existing fails on HDFS and local FS, so
     a second compactor gets a loud error, never a silent race — and a
-    lease, once visible, is never observably empty (ADVICE r17 #1: the
-    old create-then-write left the CLI's ownerless lease empty for the
-    fold's whole duration, indistinguishable from a crash stub, so a
-    concurrent owner-bearing compactor would break a LIVE lease).
+    lease, once visible, is never observably empty (a create-then-write
+    would leave the CLI's ownerless lease empty for the fold's whole
+    duration, indistinguishable from a crash stub, so a concurrent
+    owner-bearing compactor would break a LIVE lease).
 
     ``owner`` is the self-healing seam for compactors whose IDENTITY
     guarantees no concurrent twin: the in-stream ``auto_compact`` passes
@@ -288,8 +307,8 @@ def _acquire_lease(spark, fs, path: str, owner: "str | None" = None):
     running instance per checkpoint), so a lease left by a process
     DEATH of the SAME stream is recognized by its recorded owner and
     broken automatically on replay — without this, a SIGKILL mid-fold
-    would wedge the restarted stream in a raise-replay loop forever
-    (code-review r17 #1). That contract makes owner UNIQUENESS
+    would wedge the restarted stream in a raise-replay loop forever.
+    That contract makes owner UNIQUENESS
     load-bearing (self-heal is read-then-delete-then-create, not
     atomic): two live processes claiming the same owner could both
     break a dead predecessor and both acquire. Callers MUST pass an
@@ -328,7 +347,7 @@ def _acquire_lease(spark, fs, path: str, owner: "str | None" = None):
             if not fs.exists(p):
                 # released between our failed rename and this check (a
                 # finishing compactor's normal delete) — retry instead
-                # of raising for a now-free dir (ADVICE r17 #2)
+                # of raising for a now-free dir
                 if attempt < 2:
                     continue
             else:
@@ -380,14 +399,14 @@ def compact_state_dir(
     deliberately NOT folded, because on a live stream it may be the
     in-flight foreachBatch write whose checkpoint has not committed:
     folding a partial dir and pruning it would strand that batch's
-    WAL-replay rewrite behind the committed boundary (ADVICE r16 #1).
+    WAL-replay rewrite behind the committed boundary.
     Callers that KNOW the boundary (the in-stream ``auto_compact``,
     which just finished writing batch B) pass ``up_to`` explicitly.
     Returns a summary dict; {"folded_batches": 0, ...} is the no-op
     case (nothing new to fold).
 
-    ``min_src_batch`` — optional retention horizon (r16 verdict item
-    6): state rows whose ``src_batch`` is STRICTLY BELOW it are dropped
+    ``min_src_batch`` — optional retention horizon: state rows whose
+    ``src_batch`` is STRICTLY BELOW it are dropped
     during the fold, and the count is reported as ``dropped_rows`` in
     the summary (the no-silent-caps pattern). This bounds state BYTES
     (compaction alone bounds only file count — exact-dedup first-seen
@@ -410,8 +429,8 @@ def compact_state_dir(
     bucketing (layout is per-bucket). ``bucket_by=INHERIT_LAYOUT``
     adopts the previous generation's ``_GEN_META`` settings (or plain
     when there is none) — resolved UNDER the lease, so a concurrent
-    fold cannot change the layout between the decision and the write
-    (code-review r17 #3). ``lease_owner`` — see ``_acquire_lease``."""
+    fold cannot change the layout between the decision and the write.
+    ``lease_owner`` — see ``_acquire_lease``."""
     fs, hpath = _fs(spark, path)
     if not fs.exists(hpath):
         return {"generation": None, "folded_batches": 0, "up_to": 0}
@@ -526,7 +545,7 @@ def _compact_under_lease(
         # a CRASHED bucketed attempt at this same generation id left a
         # _GEN_META_<g>; committing an unbucketed retry under it would
         # make readers declare an all-NULL pb column and prune-reads
-        # filter out the whole generation (ADVICE r16 #2)
+        # filter out the whole generation
         stale_meta = Path(f"{path}/_GEN_META_{new_g}")
         if fs.exists(stale_meta):
             fs.delete(stale_meta, False)
@@ -577,9 +596,9 @@ def _compact_under_lease(
 
 def _write_retention(spark, fs, path, g, min_src_batch, dropped_rows):
     """Overwrite the cumulative record via tmp + delete + rename — the
-    same never-observably-truncated discipline as the lease
-    (code-review r18 #3: a bare overwrite-create killed mid-write left
-    an unparseable file that wedged every later horizon fold). A crash
+    same never-observably-truncated discipline as the lease (a bare
+    overwrite-create killed mid-write would leave an unparseable file
+    that wedges every later horizon fold). A crash
     mid-sequence leaves the old file, no file, or the new file — a
     LOST file costs the cumulative history (documented undercount),
     never a wedge. Runs under the fold's lease: no concurrent writer."""
@@ -638,6 +657,59 @@ def read_retention(spark: SparkSession, path: str) -> "dict | None":
         return None
 
 
+def write_batch(
+    df: DataFrame, path: str, batch_id: int, ddl: "str | None" = None
+) -> "DataFrame | None":
+    """Write one micro-batch's rows to ``<path>/batch=<batch_id>`` with
+    mode=overwrite — the write-by-batch-id idempotency pattern: Spark's
+    checkpoint keeps batch ids stable across restarts, so a batch
+    replayed after a crash REPLACES its own previous partial output
+    instead of appending duplicates. With ``ddl``, returns the
+    just-written batch re-read under that declared schema (an inferred
+    read of the partitioned dir would inject a spurious ``batch``
+    column)."""
+    out = f"{path}/batch={batch_id}"
+    df.write.mode("overwrite").parquet(out)
+    if ddl is not None:
+        return df.sparkSession.read.schema(ddl).parquet(out)
+    return None
+
+
+def read_floor(
+    batch_id: int, horizon_batches: "int | None"
+) -> "int | None":
+    """The retention horizon of batch ``batch_id``: the first batch id
+    its matching-state reads include (``resolve_state``'s
+    ``min_src_batch``), or None without a horizon. Derived from the
+    batch's OWN id, so a WAL replay reads exactly the window the
+    original run read regardless of fold timing. ``auto_compact``
+    folds with the same floor, which is one batch behind the read
+    window of the NEXT batch — see there."""
+    if horizon_batches is None:
+        return None
+    return max(0, batch_id - horizon_batches)
+
+
+def check_cadence(
+    compact_every: "int | None", horizon_batches: "int | None"
+) -> None:
+    """Both cadence arguments are None (off) or >= 1. A 0 is NOT "off":
+    ``compact_every=0`` would silently never fold, and
+    ``horizon_batches=0`` would put the floor at the batch itself, so
+    every batch would match against no history and each fold would
+    silently age out every earlier row — refuse loudly, the module's
+    every-anomaly-raises posture. Streaming jobs call this before
+    their stream starts."""
+    for name, value in (
+        ("compact_every", compact_every),
+        ("horizon_batches", horizon_batches),
+    ):
+        if value is not None and value < 1:
+            raise ValueError(
+                f"{name} must be >= 1 (got {value}); pass None to disable"
+            )
+
+
 def auto_compact(
     spark: SparkSession,
     specs: "list[tuple]",
@@ -647,18 +719,22 @@ def auto_compact(
     horizon_batches: "int | None" = None,
 ) -> "list[dict]":
     """In-stream compaction cadence: called at the END of a job's
-    foreachBatch body with the job's (state_dir, ddl[, bucket_by])
-    triples (bucket_by → hash-bucketed generation layout for the
-    pruned semi-join reads), folds all
-    committed batches every ``every`` micro-batches (no-op when
-    ``every`` is None). Safe inside the batch that also wrote state: a
-    crash between this fold and the checkpoint commit replays the
-    batch, whose strictly-earlier reads filter the generation on
-    src_batch and whose rewritten (now-folded) batch dir is invisible
-    garbage the next fold GCs — the exact crash states the compaction
-    unit tests pin. ``up_to`` is pinned to this batch id + 1 so a
-    concurrent listing anomaly can never fold a FUTURE batch's
-    replay-pending write.
+    foreachBatch body with the job's ``(state_dir, ddl[, key])`` specs,
+    folds all committed batches every ``every`` micro-batches (no-op
+    when ``every`` is None). A spec with a key is MATCHING state (the
+    exact-dedup fingerprints, LSH shingle/band state, SemDeDup
+    vectors): its generation is hash-bucketed on the key for the
+    pruned semi-join reads, and it ages out under ``horizon_batches``.
+    A spec without a key is an emitted output log, never bounded.
+
+    Safe inside the batch that also wrote state: a crash between this
+    fold and the checkpoint commit replays the batch, whose
+    strictly-earlier reads filter the generation on src_batch and
+    whose rewritten (now-folded) batch dir is invisible garbage the
+    next fold GCs — the exact crash states the compaction unit tests
+    pin. ``up_to`` is pinned to this batch id + 1 so a concurrent
+    listing anomaly can never fold a FUTURE batch's replay-pending
+    write.
 
     ``owner`` should be the stream's checkpoint path: it makes the
     fold's lease self-healing across a process DEATH of the same
@@ -668,59 +744,37 @@ def auto_compact(
     without it a SIGKILL mid-fold would wedge the replayed stream in
     a lease-refusal loop.
 
-    ``horizon_batches`` — the in-stream retention horizon (r17 verdict
-    item 5): specs whose 4th element is True (the job's MATCHING-state
-    dirs — exact-dedup fingerprints, LSH shingle/band state, SemDeDup
-    vectors; never its emitted output logs) fold with
-    ``min_src_batch = batch_id - horizon_batches`` — ONE BATCH BEHIND
-    the jobs' read-side window (resolve_state's ``min_src_batch``),
-    so the still-uncommitted batch's WAL replay reads exactly what its
-    original run read (code-review r18 #1); state retains
-    horizon_batches + 1 batches. Drops are reported in the returned
+    ``horizon_batches`` — the in-stream retention horizon: keyed specs
+    fold with ``min_src_batch = read_floor(batch_id, horizon_batches)``.
+    That is ONE BATCH BEHIND the read window of the next batch: the
+    fold runs inside batch b, BEFORE b's checkpoint commits, so b may
+    still replay, and its replay reads from ``read_floor(b, horizon)``
+    too. Keeping src_batch >= b - horizon guarantees the replay sees
+    exactly what the original run saw; state therefore retains
+    horizon_batches + 1 batches, the matching window plus the
+    in-flight batch's replay needs. Drops are reported in the returned
     summaries AND accumulated durably in the dir's ``_RETENTION`` file
     (``read_retention``) — the no-silent-caps pattern for a fold whose
     caller is a foreachBatch body that discards return values. A
     100-TB deployment sets this to its contamination window; the
     documented cost is that a duplicate of a document first seen
     before the horizon is re-admitted."""
-    if horizon_batches is not None and horizon_batches < 1:
-        # 0 is NOT "disabled" (that is None): min_src would equal the
-        # fold's own up_to and every row including the current batch's
-        # would silently age out at each fold — refuse loudly, the
-        # module's every-anomaly-raises posture
-        raise ValueError(
-            f"horizon_batches must be >= 1 (got {horizon_batches}); "
-            "pass None to disable the retention horizon"
-        )
-    if every is None or every < 1 or (batch_id + 1) % every != 0:
+    check_cadence(every, horizon_batches)
+    if every is None or (batch_id + 1) % every != 0:
         return []
     out = []
-    for spec in specs:
-        path, ddl = spec[0], spec[1]
-        bucket_by = spec[2] if len(spec) > 2 else None
-        bounded = bool(spec[3]) if len(spec) > 3 else False
+    for path, ddl, *key in specs:
         _batches, gens, markers = list_state(spark, path)
         newest = newest_generation(gens, markers)
         if newest is not None and newest[2] >= batch_id + 1:
             # WAL replay of an already-folded batch: the boundary has
             # moved past us; folding again would be a rollback — skip
             continue
-        # ONE BATCH BEHIND the read window (code-review r18 #1): the
-        # fold runs inside batch b, BEFORE b's checkpoint commits, so
-        # b may still replay — and its replay reads min_src_batch =
-        # b - horizon (the read-side horizon in resolve_state). Keeping
-        # src_batch >= b - horizon guarantees the replay sees exactly
-        # what the original run saw; state therefore retains
-        # horizon_batches + 1 batches, the matching window plus the
-        # in-flight batch's replay needs.
-        min_src = (
-            max(0, batch_id - horizon_batches)
-            if bounded and horizon_batches is not None
-            else None
-        )
+        floor = read_floor(batch_id, horizon_batches) if key else None
         res = compact_state_dir(
-            spark, path, ddl, up_to=batch_id + 1, bucket_by=bucket_by,
-            lease_owner=owner, min_src_batch=min_src,
+            spark, path, ddl, up_to=batch_id + 1,
+            bucket_by=key[0] if key else None, lease_owner=owner,
+            min_src_batch=floor,
         )
         res["path"] = path
         out.append(res)

@@ -24,7 +24,14 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from micmac_li3ds_spark.functions.exact import cents
-from micmac_li3ds_spark.streaming.compaction import auto_compact
+from micmac_li3ds_spark.streaming.compaction import (
+    auto_compact,
+    check_cadence,
+    list_state,
+    read_floor,
+    resolve_state,
+    write_batch,
+)
 
 # Stateful-processor closures below reference module-level helpers
 # (fold_session_events); cloudpickle ships globals of importable
@@ -246,8 +253,8 @@ CLICKS_DLQ_SCHEMA = T.StructType(
 
 def read_clicks_json_stream(spark: SparkSession, src_dir: str) -> DataFrame:
     """JSON-lines file stream in PERMISSIVE mode with the corrupt-record
-    channel — the streaming twin of q_scan_json's parse-audit posture
-    (round 14): a continuously-fed ingest directory never gets clean
+    channel — the streaming twin of q_scan_json's parse-audit posture:
+    a continuously-fed ingest directory never gets clean
     files either, and FAILFAST would kill the long-running query on the
     first bad line. One file per micro-batch mirrors a
     file-notification ingest; all declared columns are materialized
@@ -268,11 +275,6 @@ def _read_lake_or_state(spark: SparkSession, path: str, ddl: str) -> DataFrame:
     the ``batch=<k>`` layout the streaming writers produce, or the
     compacted ``gen=<g>`` + live-batch layout (streaming/compaction.py)
     — so triage/replay tools keep working after a maintenance fold."""
-    from micmac_li3ds_spark.streaming.compaction import (
-        list_state,
-        resolve_state,
-    )
-
     batches, _gens, markers = list_state(spark, path)
     if batches or markers:
         return resolve_state(spark, path, ddl)
@@ -291,34 +293,28 @@ def run_dead_letter_split(
     (FAILFAST), and never pollute the clean table with partially-parsed
     fields — they land whole in the DLQ for triage.
 
-    Exactly-once without a transactional target: each batch writes to
-    its own ``batch=<id>`` subdirectory with mode=overwrite, so a batch
-    retried after a crash REPLACES its own previous partial output
-    instead of appending duplicates (the write-by-batch-id idempotency
-    pattern; Spark's checkpoint guarantees batch ids are stable across
-    restarts). Readers scan the directory tree as ordinary partitioned
-    parquet."""
+    Exactly-once without a transactional target: each batch writes
+    through ``compaction.write_batch`` (its own ``batch=<id>``
+    subdirectory, mode=overwrite), so a batch retried after a crash
+    REPLACES its own previous partial output instead of appending
+    duplicates. Readers scan the directory tree as ordinary
+    partitioned parquet."""
     corrupt = F.col("_corrupt_record").isNotNull()
 
     def split(batch_df: DataFrame, batch_id: int) -> None:
         batch_df = batch_df.persist()
         try:
-            (
-                batch_df.filter(~corrupt)
-                .drop("_corrupt_record")
-                .write.mode("overwrite")
-                .parquet(f"{clean_dir}/batch={batch_id}")
+            write_batch(
+                batch_df.filter(~corrupt).drop("_corrupt_record"),
+                clean_dir,
+                batch_id,
             )
-            (
-                batch_df.filter(corrupt)
-                .select(
-                    F.col("_corrupt_record").alias("raw_line"),
-                    F.lit(batch_id).alias("batch_id"),
-                    F.current_timestamp().alias("ingest_ts"),
-                )
-                .write.mode("overwrite")
-                .parquet(f"{dlq_dir}/batch={batch_id}")
+            dead = batch_df.filter(corrupt).select(
+                F.col("_corrupt_record").alias("raw_line"),
+                F.lit(batch_id).alias("batch_id"),
+                F.current_timestamp().alias("ingest_ts"),
             )
+            write_batch(dead, dlq_dir, batch_id)
         finally:
             batch_df.unpersist()
 
@@ -345,7 +341,7 @@ def replay_dead_letters(
     # malformed line parses to an all-NULL struct, not a NULL struct),
     # so classification at replay time is bit-identical to what ingest
     # would have decided under the amended schema.
-    # ADVICE r14 #2: the corrupt-record column must not collide with a
+    # The corrupt-record column must not collide with a
     # field the AMENDED schema already declares (a producer is free to
     # ship a real `_corrupt` JSON field) — from_json would then route
     # that field's data into the classification column and misclassify
@@ -365,7 +361,7 @@ def replay_dead_letters(
             {"columnNameOfCorruptRecord": corrupt_col},
         ),
     )
-    # ADVICE r14 #2 (second half): from_json(NULL) returns a NULL
+    # Second half of the same rule: from_json(NULL) returns a NULL
     # struct, so `corrupt IS NULL` alone would classify a NULL raw
     # line as recovered and append an all-NULL row to the clean table;
     # a NULL line is not recoverable by any schema amendment — it
@@ -676,8 +672,8 @@ def fold_session_events(
     session — exactly session_window's split, whatever the interleaving
     of late data and carried state. Boundary semantics: an event at
     EXACTLY last_s + gap_s MERGES into the open session (inclusive
-    ``<=``). This was questioned by r8 advice (session_window intervals
-    print as half-open [event, event+gap)) and settled by measurement:
+    ``<=``). This looks wrong (session_window intervals print as
+    half-open [event, event+gap)) and was settled by measurement:
     on this Spark, events at t=0 and t=100 with a 100 s gap produce ONE
     session_window row [0, 200) — adjacent intervals merge — so the
     inclusive fold matches the built-in bit-for-bit; the boundary case
@@ -799,6 +795,79 @@ _DUPS_DDL = "doc_id long, fp string, n long"
 _SEM_PAIRS_DDL = "doc_a long, doc_b long, cos double"
 
 
+def _by_batch_job(
+    stream: DataFrame, body, specs: "list[tuple]", checkpoint: str,
+    compact_every: "int | None" = None, horizon_batches: "int | None" = None,
+):
+    """Start a by-batch state job: each micro-batch runs ``body(batch_df,
+    batch_id)`` — the job's own DataFrame logic, writing through
+    ``write_batch`` — and then the shared compaction tail over the
+    job's ``(dir, ddl[, key])`` state specs (keyed = matching state,
+    bucketed and aged out by the horizon; see ``auto_compact``). The
+    checkpoint is the fold lease's owner: Spark's checkpoint lock
+    guarantees one live stream per checkpoint, which is what makes a
+    self-healing owner safe. Cadence arguments are checked here, before
+    the stream starts and before any state is written.
+
+    ``auto_compact`` and ``run_foreach_batch`` are looked up in this
+    module at call time, so a caller that rebinds them (the traced
+    benchmark's spans) sees every batch and every fold."""
+    check_cadence(compact_every, horizon_batches)
+
+    def run_batch(batch_df: DataFrame, batch_id: int) -> None:
+        body(batch_df, batch_id)
+        auto_compact(
+            batch_df.sparkSession, specs, batch_id, compact_every,
+            owner=checkpoint, horizon_batches=horizon_batches,
+        )
+
+    return run_foreach_batch(stream, run_batch, checkpoint)
+
+
+def _fresh_pairs(pairs: DataFrame, new_ids: DataFrame) -> DataFrame:
+    """Candidate (doc_a, doc_b) pairs with at least one side in the
+    one-column ``new_ids``: any old-old pair sharing a bucket was
+    already a candidate when the younger side arrived, so keeping only
+    pairs with ≥1 new side makes each pair's emission
+    unique-by-construction for distinct ids."""
+    (id_col,) = new_ids.columns
+    na = new_ids.select(F.col(id_col).alias("doc_a")).withColumn(
+        "a_new", F.lit(True)
+    )
+    nb = new_ids.select(F.col(id_col).alias("doc_b")).withColumn(
+        "b_new", F.lit(True)
+    )
+    return (
+        pairs.join(na, "doc_a", "left")
+        .join(nb, "doc_b", "left")
+        .filter(F.col("a_new").isNotNull() | F.col("b_new").isNotNull())
+        .select("doc_a", "doc_b")
+    )
+
+
+def _verify_pairs(
+    fresh: DataFrame, state: DataFrame, id_col: str, val_col: str, score,
+    name: str, threshold: float,
+) -> DataFrame:
+    """Exact verification of candidate pairs: join both sides' values
+    from the accumulated ``state`` on ``id_col``, score them with
+    ``score(a, b)`` rounded to 6 dp (the batch twins' rounding), and
+    keep (doc_a, doc_b, <name>) at or above ``threshold``."""
+    a, b = f"{val_col}_a", f"{val_col}_b"
+    va = state.select(F.col(id_col).alias("doc_a"), F.col(val_col).alias(a))
+    vb = state.select(F.col(id_col).alias("doc_b"), F.col(val_col).alias(b))
+    return (
+        fresh.join(va, "doc_a")
+        .join(vb, "doc_b")
+        .select(
+            "doc_a",
+            "doc_b",
+            F.round(score(F.col(a), F.col(b)), 6).alias(name),
+        )
+        .filter(F.col(name) >= threshold)
+    )
+
+
 def run_streaming_near_dedup(
     stream: DataFrame,
     shingle_dir: str,
@@ -811,10 +880,10 @@ def run_streaming_near_dedup(
     horizon_batches: "int | None" = None,
 ):
     """Incremental MinHash/LSH near-dedup of a continuously-fed corpus
-    (r14 verdict item 7) — the streaming twin of q_llm_near_dedup,
-    completing the DLQ-ingest posture: a 100-TB training-data feed
-    dedups AGAINST EVERYTHING ALREADY SEEN as batches arrive, not in a
-    nightly all-corpus rebuild.
+    — the streaming twin of q_llm_near_dedup, completing the
+    DLQ-ingest posture: a 100-TB training-data feed dedups AGAINST
+    EVERYTHING ALREADY SEEN as batches arrive, not in a nightly
+    all-corpus rebuild.
 
     Shares the batch pipeline's EXACT components (tokens → 3-token
     shingles → minhash_band_keys → lsh_candidate_pairs → exact-Jaccard
@@ -874,42 +943,25 @@ def run_streaming_near_dedup(
 
     def dedup_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        # read-side horizon: the matching window is the previous
-        # horizon_batches batches, derived from OUR batch id so a WAL
-        # replay reads exactly what the original run read regardless
-        # of fold timing (code-review r18 #1)
-        read_min = (
-            max(0, batch_id - horizon_batches)
-            if horizon_batches is not None
-            else None
-        )
+        read_min = read_floor(batch_id, horizon_batches)
         d = (
             batch_df.filter(F.size(tokens("text")) >= 3)
             .select("doc_id", shingles(tokens("text")).alias("sh"))
             .persist()
         )
         try:
-            d.write.mode("overwrite").parquet(
-                f"{shingle_dir}/batch={batch_id}"
+            write_batch(d, shingle_dir, batch_id)
+            bands = write_batch(
+                minhash_band_keys(d), bands_dir, batch_id, _BANDS_DDL
             )
-            minhash_band_keys(d).write.mode("overwrite").parquet(
-                f"{bands_dir}/batch={batch_id}"
-            )
-
             # declared-schema, generation-aware state reads (a compacted
             # dir holds gen=<g> next to live batch dirs — a root-path
             # inferred read would mis-handle the mixed layout). The
             # batch's distinct band keys double as the PRUNE set: when
             # the band state has been bucket-compacted, only the
             # touched buckets' files are listed and read.
-            new_ids = d.select("doc_id")
-            hot_keys = (
-                spark.read.schema(_BANDS_DDL)
-                .parquet(f"{bands_dir}/batch={batch_id}")
-                .select("band_key")
-                .distinct()
-            )
-            all_bands = _read_or_empty(
+            hot_keys = bands.select("band_key").distinct()
+            all_bands = resolve_state(
                 spark,
                 bands_dir,
                 _BANDS_DDL,
@@ -918,77 +970,46 @@ def run_streaming_near_dedup(
             )
             touched = all_bands.join(hot_keys, "band_key", "left_semi")
             pairs = lsh_candidate_pairs(touched, bucket_cap)
-            na = new_ids.select(F.col("doc_id").alias("doc_a")).withColumn(
-                "a_new", F.lit(True)
-            )
-            nb = new_ids.select(F.col("doc_id").alias("doc_b")).withColumn(
-                "b_new", F.lit(True)
-            )
-            fresh = (
-                pairs.join(na, "doc_a", "left")
-                .join(nb, "doc_b", "left")
-                .filter(
-                    F.col("a_new").isNotNull() | F.col("b_new").isNotNull()
-                )
-                .select("doc_a", "doc_b")
-                # persisted: read twice when the shingle state is
-                # bucket-compacted (once to collect the candidates'
-                # prune buckets, once in the verification joins);
-                # released in finally so a failed batch cannot leak
-                # the cached frame for the session lifetime
-                .persist()
-            )
+            # persisted: read twice when the shingle state is
+            # bucket-compacted (once to collect the candidates' prune
+            # buckets, once in the verification joins); released in
+            # finally so a failed batch cannot leak the cached frame
+            # for the session lifetime
+            fresh = _fresh_pairs(pairs, d.select("doc_id")).persist()
             try:
                 cand_ids = fresh.select(
                     F.col("doc_a").alias("doc_id")
                 ).unionByName(
                     fresh.select(F.col("doc_b").alias("doc_id"))
                 ).distinct()
-                corpus = _read_or_empty(
+                corpus = resolve_state(
                     spark,
                     shingle_dir,
                     _SHINGLE_DDL,
                     prune_keys=cand_ids,
                     min_src_batch=read_min,
                 )
-                sa = corpus.select(
-                    F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a")
+                verified = _verify_pairs(
+                    fresh, corpus, "doc_id", "sh", jaccard, "jac", threshold
                 )
-                sb = corpus.select(
-                    F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b")
-                )
-                (
-                    fresh.join(sa, "doc_a")
-                    .join(sb, "doc_b")
-                    .select(
-                        "doc_a",
-                        "doc_b",
-                        F.round(
-                            jaccard(F.col("sh_a"), F.col("sh_b")), 6
-                        ).alias("jac"),
-                    )
-                    .filter(F.col("jac") >= threshold)
-                    .write.mode("overwrite")
-                    .parquet(f"{pairs_dir}/batch={batch_id}")
-                )
+                write_batch(verified, pairs_dir, batch_id)
             finally:
                 fresh.unpersist()
         finally:
             d.unpersist()
-        auto_compact(
-            spark,
-            [
-                (shingle_dir, _SHINGLE_DDL, "doc_id", True),
-                (bands_dir, _BANDS_DDL, "band_key", True),
-                (pairs_dir, _NEAR_PAIRS_DDL),
-            ],
-            batch_id,
-            compact_every,
-            owner=checkpoint,
-            horizon_batches=horizon_batches,
-        )
 
-    return run_foreach_batch(stream, dedup_batch, checkpoint)
+    return _by_batch_job(
+        stream,
+        dedup_batch,
+        [
+            (shingle_dir, _SHINGLE_DDL, "doc_id"),
+            (bands_dir, _BANDS_DDL, "band_key"),
+            (pairs_dir, _NEAR_PAIRS_DDL),
+        ],
+        checkpoint,
+        compact_every,
+        horizon_batches,
+    )
 
 
 def read_near_dedup_pairs(spark: SparkSession, pairs_dir: str) -> DataFrame:
@@ -997,56 +1018,7 @@ def read_near_dedup_pairs(spark: SparkSession, pairs_dir: str) -> DataFrame:
     determinism), and a pair of same-batch duplicates is emitted once
     — distinct on the full row collapses both. Empty (never raising)
     before the stream's first batch commits."""
-    return _read_or_empty(spark, pairs_dir, _NEAR_PAIRS_DDL).distinct()
-
-
-def _read_or_empty(
-    spark: SparkSession,
-    path: str,
-    ddl: str,
-    before_batch: "int | None" = None,
-    prune_keys: "DataFrame | None" = None,
-    min_src_batch: "int | None" = None,
-) -> DataFrame:
-    """Accumulated-state reader for by-batch-id parquet dirs that may
-    not exist yet (the very first micro-batch of a stream): returns an
-    empty DataFrame of the declared schema instead of failing the
-    batch. Declared, never inferred — an empty dir must still join.
-
-    ``before_batch`` restricts the read to ``batch=<k>`` dirs with
-    k < before_batch — REQUIRED whenever a batch's logic reads state
-    it also writes: on a WAL replay the state dir already contains the
-    replayed batch's own previous output, and reading it back would
-    make the replay see itself as history (the exact-dedup erasure bug
-    a code-review differential reproduced: replayed fingerprints
-    anti-joined against their own prior write → `new` empty → the
-    overwrite destroyed the batch's first-seen rows).
-
-    Discovery goes through the Hadoop FileSystem API resolved from the
-    state dir's OWN scheme (ADVICE r15 #1) — the docstrings advertise
-    object-storage lake layouts (s3a://, hdfs://), where the earlier
-    driver-local ``os.listdir`` silently returned empty and every
-    reader would have treated real accumulated state as absent. Same
-    discipline as DurableLoopState (functions/iterate.py).
-
-    GENERATION-AWARE (r16): when the dir has been compacted
-    (streaming/compaction.py), state = newest committed generation +
-    batch dirs at-or-after its fold boundary; ``before_batch`` prunes
-    the generation by its per-row ``src_batch`` column, so the
-    strictly-earlier replay rule survives compaction bit-exactly.
-    ``min_src_batch`` is the READ side of the retention horizon —
-    jobs derive it from their own batch id so a replay's read window
-    is independent of fold timing (see compaction.resolve_state)."""
-    from micmac_li3ds_spark.streaming.compaction import resolve_state
-
-    return resolve_state(
-        spark,
-        path,
-        ddl,
-        before_batch=before_batch,
-        prune_keys=prune_keys,
-        min_src_batch=min_src_batch,
-    )
+    return resolve_state(spark, pairs_dir, _NEAR_PAIRS_DDL).distinct()
 
 
 _EXACT_SEEN_DDL = "fp string, kept_doc_id long"
@@ -1060,9 +1032,9 @@ def run_streaming_exact_dedup(
     compact_every: "int | None" = None,
     horizon_batches: "int | None" = None,
 ):
-    """Incremental EXACT dedup against ALL history (round 15) — the
-    first member of the streaming dedup family stated as its own job.
-    Watermarked ``dropDuplicates`` bounds its state by event time (the
+    """Incremental EXACT dedup against ALL history — the first member
+    of the streaming dedup family stated as its own job. Watermarked
+    ``dropDuplicates`` bounds its state by event time (the
     q_stream-dedup twin) — correct for at-most-once-per-window feeds,
     but a training-data lake needs "have I EVER ingested these bytes",
     which is unbounded by design and therefore lives as external
@@ -1106,49 +1078,36 @@ def run_streaming_exact_dedup(
     (compaction.read_retention) — see ``auto_compact``."""
     from micmac_li3ds_spark.operators.llm_text import exact_fingerprint
 
-    SEEN_DDL = _EXACT_SEEN_DDL
-
     def dedup_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
         b = batch_df.select(
             "doc_id", exact_fingerprint("text").alias("fp")
         ).persist()
         try:
             # STRICTLY EARLIER batches only: a WAL replay must not see
-            # its own previous output as history (see _read_or_empty).
+            # its own previous output as history (see resolve_state).
             # The batch's distinct fingerprints prune a bucket-compacted
             # seen state to the files that can possibly match.
-            seen = _read_or_empty(
-                spark,
+            seen = resolve_state(
+                batch_df.sparkSession,
                 seen_dir,
-                SEEN_DDL,
+                _EXACT_SEEN_DDL,
                 before_batch=batch_id,
                 prune_keys=b.select("fp").distinct(),
-                # read-side horizon (code-review r18 #1): replay reads
-                # exactly the original window regardless of fold timing
-                min_src_batch=(
-                    max(0, batch_id - horizon_batches)
-                    if horizon_batches is not None
-                    else None
-                ),
+                min_src_batch=read_floor(batch_id, horizon_batches),
             )
             new = (
                 b.groupBy("fp")
                 .agg(F.min("doc_id").alias("kept_doc_id"))
                 .join(seen.select("fp"), "fp", "left_anti")
             )
-            new.write.mode("overwrite").parquet(
-                f"{seen_dir}/batch={batch_id}"
-            )
             kept = (
-                spark.read.schema(SEEN_DDL)
-                .parquet(f"{seen_dir}/batch={batch_id}")
+                write_batch(new, seen_dir, batch_id, _EXACT_SEEN_DDL)
                 .select("fp", F.col("kept_doc_id").alias("doc_id"))
                 .withColumn("is_keep", F.lit(1))
             )
             # arrivals minus the one kept copy per newly-seen fp —
             # identical rows arriving twice are two arrivals
-            (
+            dups = (
                 b.groupBy("fp", "doc_id")
                 .agg(F.count(F.lit(1)).alias("n"))
                 .join(kept, ["fp", "doc_id"], "left")
@@ -1157,21 +1116,19 @@ def run_streaming_exact_dedup(
                 )
                 .filter(F.col("n") > 0)
                 .select("doc_id", "fp", "n")
-                .write.mode("overwrite")
-                .parquet(f"{dups_dir}/batch={batch_id}")
             )
+            write_batch(dups, dups_dir, batch_id)
         finally:
             b.unpersist()
-        auto_compact(
-            spark,
-            [(seen_dir, SEEN_DDL, "fp", True), (dups_dir, _DUPS_DDL)],
-            batch_id,
-            compact_every,
-            owner=checkpoint,
-            horizon_batches=horizon_batches,
-        )
 
-    return run_foreach_batch(stream, dedup_batch, checkpoint)
+    return _by_batch_job(
+        stream,
+        dedup_batch,
+        [(seen_dir, _EXACT_SEEN_DDL, "fp"), (dups_dir, _DUPS_DDL)],
+        checkpoint,
+        compact_every,
+        horizon_batches,
+    )
 
 
 def read_exact_dedup(
@@ -1181,8 +1138,8 @@ def read_exact_dedup(
     fingerprint ever seen, its first-seen keeper, and the total copy
     count (1 + logged dup arrivals) — q_llm_exact_dedup's output
     contract over the stream's history."""
-    seen = _read_or_empty(spark, seen_dir, _EXACT_SEEN_DDL)
-    dups = _read_or_empty(spark, dups_dir, _DUPS_DDL)
+    seen = resolve_state(spark, seen_dir, _EXACT_SEEN_DDL)
+    dups = resolve_state(spark, dups_dir, _DUPS_DDL)
     counts = dups.groupBy("fp").agg(F.sum("n").alias("n_dups"))
     return seen.join(counts, "fp", "left").select(
         "fp",
@@ -1208,11 +1165,11 @@ def run_streaming_semantic_dedup(
     compact_every: "int | None" = None,
     horizon_batches: "int | None" = None,
 ):
-    """Incremental SemDeDup (round 15) — the EMBEDDING member of the
-    streaming dedup family, next to exact (dropDuplicates-within-
-    watermark) and lexical near-dup (run_streaming_near_dedup): a
-    continuously-fed vector corpus dedups against everything already
-    seen as batches arrive, instead of a nightly whole-corpus re-run.
+    """Incremental SemDeDup — the EMBEDDING member of the streaming
+    dedup family, next to exact (dropDuplicates-within-watermark) and
+    lexical near-dup (run_streaming_near_dedup): a continuously-fed
+    vector corpus dedups against everything already seen as batches
+    arrive, instead of a nightly whole-corpus re-run.
 
     ``centroids`` is a STATIC (cid, cv) DataFrame fixed for the
     stream's lifetime — the stream-static shape production SemDeDup
@@ -1266,39 +1223,23 @@ def run_streaming_semantic_dedup(
     n_cent = centroids.count()
 
     def dedup_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
         asg = nearest_centroid_assign(
             batch_df.select("vec_id", "v"),
             centroids,
             extra_cols=("v",),
             n_centroids=n_cent,
         ).select("vec_id", F.col("centroid_id").alias("cid"), "v")
-        asg.write.mode("overwrite").parquet(
-            f"{vectors_dir}/batch={batch_id}"
-        )
-
-        # declared-schema state read, like every other state reader
-        # (ADVICE r15 #2): inference on the partitioned dir also
-        # injected a spurious 'batch' partition column into the state
-        new = spark.read.schema(_SEM_VEC_DDL).parquet(
-            f"{vectors_dir}/batch={batch_id}"
-        )
+        new = write_batch(asg, vectors_dir, batch_id, _SEM_VEC_DDL)
         hot = new.select("cid").distinct()
         # candidates and their verification vectors all live in the
         # batch's TOUCHED clusters, so the hot cids prune a
         # bucket-compacted vector state down to those clusters' files
-        state = _read_or_empty(
-            spark,
+        state = resolve_state(
+            batch_df.sparkSession,
             vectors_dir,
             _SEM_VEC_DDL,
-            # read-side horizon (code-review r18 #1): replay reads
-            # exactly the original window regardless of fold timing
-            min_src_batch=(
-                max(0, batch_id - horizon_batches)
-                if horizon_batches is not None
-                else None
-            ),
-            prune_keys=hot
+            min_src_batch=read_floor(batch_id, horizon_batches),
+            prune_keys=hot,
         )
         touched = state.join(hot, "cid", "left_semi")
         pairs = lsh_candidate_pairs(
@@ -1308,49 +1249,20 @@ def run_streaming_semantic_dedup(
             ),
             bucket_cap=cluster_cap,
         )
-        na = new.select(F.col("vec_id").alias("doc_a")).withColumn(
-            "a_new", F.lit(True)
+        fresh = _fresh_pairs(pairs, new.select("vec_id"))
+        verified = _verify_pairs(
+            fresh, state, "vec_id", "v", cosine, "cos", tau
         )
-        nb = new.select(F.col("vec_id").alias("doc_b")).withColumn(
-            "b_new", F.lit(True)
-        )
-        fresh = (
-            pairs.join(na, "doc_a", "left")
-            .join(nb, "doc_b", "left")
-            .filter(F.col("a_new").isNotNull() | F.col("b_new").isNotNull())
-            .select("doc_a", "doc_b")
-        )
-        va = state.select(
-            F.col("vec_id").alias("doc_a"), F.col("v").alias("va")
-        )
-        vb = state.select(
-            F.col("vec_id").alias("doc_b"), F.col("v").alias("vb")
-        )
-        (
-            fresh.join(va, "doc_a")
-            .join(vb, "doc_b")
-            .select(
-                "doc_a",
-                "doc_b",
-                F.round(cosine(F.col("va"), F.col("vb")), 6).alias("cos"),
-            )
-            .filter(F.col("cos") >= tau)
-            .write.mode("overwrite")
-            .parquet(f"{pairs_dir}/batch={batch_id}")
-        )
-        auto_compact(
-            spark,
-            [
-                (vectors_dir, _SEM_VEC_DDL, "cid", True),
-                (pairs_dir, _SEM_PAIRS_DDL),
-            ],
-            batch_id,
-            compact_every,
-            owner=checkpoint,
-            horizon_batches=horizon_batches,
-        )
+        write_batch(verified, pairs_dir, batch_id)
 
-    return run_foreach_batch(stream, dedup_batch, checkpoint)
+    return _by_batch_job(
+        stream,
+        dedup_batch,
+        [(vectors_dir, _SEM_VEC_DDL, "cid"), (pairs_dir, _SEM_PAIRS_DDL)],
+        checkpoint,
+        compact_every,
+        horizon_batches,
+    )
 
 
 def read_semantic_dedup_pairs(spark: SparkSession, pairs_dir: str) -> DataFrame:
@@ -1358,7 +1270,7 @@ def read_semantic_dedup_pairs(spark: SparkSession, pairs_dir: str) -> DataFrame:
     re-fed vec_id legitimately re-emits its pairs — assignment and
     cosine are deterministic). Empty (never raising) before the
     stream's first batch commits."""
-    return _read_or_empty(spark, pairs_dir, _SEM_PAIRS_DDL).distinct()
+    return resolve_state(spark, pairs_dir, _SEM_PAIRS_DDL).distinct()
 
 
 def read_semantic_dedup_keepers(
@@ -1372,12 +1284,12 @@ def read_semantic_dedup_keepers(
     from micmac_li3ds_spark.operators.analytics import cc_fixpoint
 
     edges = (
-        _read_or_empty(spark, pairs_dir, "doc_a long, doc_b long")
+        resolve_state(spark, pairs_dir, "doc_a long, doc_b long")
         .select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
         .distinct()
     )
     lbl, _rounds = cc_fixpoint(edges)
-    vecs = _read_or_empty(spark, vectors_dir, "vec_id long").distinct()
+    vecs = resolve_state(spark, vectors_dir, "vec_id long").distinct()
     return vecs.join(lbl, vecs["vec_id"] == lbl["node"], "left").select(
         "vec_id",
         F.coalesce(F.col("lbl"), F.col("vec_id")).alias("keeper"),
@@ -1401,7 +1313,7 @@ def read_near_dedup_clusters(spark: SparkSession, pairs_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     edges = (
-        _read_or_empty(spark, pairs_dir, "doc_a long, doc_b long")
+        resolve_state(spark, pairs_dir, "doc_a long, doc_b long")
         .select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
         .distinct()
     )
@@ -1440,22 +1352,31 @@ def read_media_file_stream(
     )
 
 
-def _media_id_expr(fname, job: str):
-    """media_id from the lake layout contract ``<media_id>.<ext>`` —
-    ENFORCED, not pattern-matched loosely (code-review r15): a
-    versioned re-upload like ``9000_v2.mkv`` must not silently merge
-    with ``9000.mkv`` under one id, and a non-numeric stem must not
-    become a NULL id — both fail the batch loudly, the same posture as
-    the unknown-extension raise."""
-    ok = fname.rlike(r"^\d+\.[^.]+$")
+def _lake_id_expr(
+    fname, job: str, id_name: str = "media_id", ext_re: str = r"[^.]+",
+    ext_label: str = "<ext>",
+):
+    """The numeric file id from the lake layout contract
+    ``<id>.<ext>`` — ENFORCED, not pattern-matched loosely, and shared
+    by every file-ingest job (media: ``<media_id>.<ext>``; WARC:
+    ``<file_id>.warc[.gz]``, with ``ext_re``/``ext_label`` narrowing
+    the extension). A versioned re-upload like ``9000_v2.mkv`` must not
+    silently merge with ``9000.mkv`` under one id, a non-numeric stem
+    must not become a NULL id, and the id must be written without
+    leading zeros: ``007.mkv`` and ``7.mkv`` would both map to id 7 and
+    merge under the readers' distinct(), so each id has exactly one
+    canonical name (``0`` itself has no shorter spelling). Every
+    violation fails the batch loudly, the same posture as the
+    unknown-extension raise."""
+    ok = fname.rlike(rf"^(0|[1-9]\d*)\.{ext_re}$")
     return (
         F.when(
             ~ok,
             F.raise_error(
                 F.concat(
                     F.lit(
-                        f"{job}: file name violates the <media_id>.<ext> "
-                        "lake contract: "
+                        f"{job}: file name violates the "
+                        f"<{id_name}>.{ext_label} lake contract: "
                     ),
                     fname,
                 )
@@ -1464,7 +1385,7 @@ def _media_id_expr(fname, job: str):
         .otherwise(
             F.regexp_extract(fname, r"^(\d+)", 1).cast("long")
         )
-        .alias("media_id")
+        .alias(id_name)
     )
 
 
@@ -1498,17 +1419,16 @@ def run_streaming_feature_extract(
     checkpoint: str,
     compact_every: "int | None" = None,
 ):
-    """Continuous decode + feature-extract over a MIXED media lake
-    (round 15): as image/audio files land, each micro-batch maps
-    <media_id>.<ext> to (media_id, mime, payload) — mime from the
-    extension via MEDIA_EXT_MIME — and runs the shared
-    feature_extract plumbing with the mime-dispatching decode_auto
-    (every real zero-dep decoder: BMP, PPM, WAV, PNG, GIF, AIFF,
-    TIFF). Features land by batch id (idempotent WAL replay). An
-    unknown extension fails the batch loudly — a lake sweep must
-    surface unexpected formats, not stub them silently. Pure map work
-    over the binary column: no shuffle in the stage, scale-out is
-    files-per-batch × executors."""
+    """Continuous decode + feature-extract over a MIXED media lake: as
+    image/audio files land, each micro-batch maps <media_id>.<ext> to
+    (media_id, mime, payload) — mime from the extension via
+    MEDIA_EXT_MIME — and runs the shared feature_extract plumbing with
+    the mime-dispatching decode_auto (every real zero-dep decoder:
+    BMP, PPM, WAV, PNG, GIF, AIFF, TIFF). Features land by batch id
+    (idempotent WAL replay). An unknown extension fails the batch
+    loudly — a lake sweep must surface unexpected formats, not stub
+    them silently. Pure map work over the binary column: no shuffle in
+    the stage, scale-out is files-per-batch × executors."""
     from micmac_li3ds_spark.operators.multimodal import (
         decode_auto,
         feature_extract,
@@ -1535,24 +1455,19 @@ def run_streaming_feature_extract(
 
     def fx_batch(batch_df: DataFrame, batch_id: int) -> None:
         media = batch_df.select(
-            _media_id_expr(fname, "run_streaming_feature_extract"),
+            _lake_id_expr(fname, "run_streaming_feature_extract"),
             mime_expr.alias("mime"),
             F.col("content").alias("payload"),
         )
-        feature_extract(
+        features = feature_extract(
             media, decode=decode_auto, decoder_name="auto-dispatch-v1"
-        ).write.mode("overwrite").parquet(
-            f"{features_dir}/batch={batch_id}"
         )
-        auto_compact(
-            batch_df.sparkSession,
-            [(features_dir, _FEATURES_DDL)],
-            batch_id,
-            compact_every,
-            owner=checkpoint,
-        )
+        write_batch(features, features_dir, batch_id)
 
-    return run_foreach_batch(stream, fx_batch, checkpoint)
+    return _by_batch_job(
+        stream, fx_batch, [(features_dir, _FEATURES_DDL)], checkpoint,
+        compact_every,
+    )
 
 
 def run_streaming_frame_sample(
@@ -1563,8 +1478,8 @@ def run_streaming_frame_sample(
     hi_ms: "int | None" = None,
     compact_every: "int | None" = None,
 ):
-    """Continuous media ingest → keyframe index (round 15): as Matroska
-    files land in the lake, each micro-batch runs the EBML walk
+    """Continuous media ingest → keyframe index: as Matroska files land
+    in the lake, each micro-batch runs the EBML walk
     (operators/multimodal.py:_mkv_sample_index) over the NEW payloads
     only and appends their keyframe rows — the media twin of the DLQ/
     near-dedup ingest posture, replacing a nightly whole-lake re-walk.
@@ -1591,7 +1506,7 @@ def run_streaming_frame_sample(
         spark = batch_df.sparkSession
         fname = F.element_at(F.split("path", "/"), -1)
         media = batch_df.select(
-            _media_id_expr(fname, "run_streaming_frame_sample"),
+            _lake_id_expr(fname, "run_streaming_frame_sample"),
             F.col("content").alias("payload"),
         )
         out = (
@@ -1599,13 +1514,12 @@ def run_streaming_frame_sample(
             if lo_ms is None
             else mkv_frame_sample_range(spark, lo_ms, hi_ms, media=media)
         )
-        out.write.mode("overwrite").parquet(f"{frames_dir}/batch={batch_id}")
-        auto_compact(
-            spark, [(frames_dir, _FRAMES_DDL)], batch_id, compact_every,
-            owner=checkpoint,
-        )
+        write_batch(out, frames_dir, batch_id)
 
-    return run_foreach_batch(stream, sample_batch, checkpoint)
+    return _by_batch_job(
+        stream, sample_batch, [(frames_dir, _FRAMES_DDL)], checkpoint,
+        compact_every,
+    )
 
 
 def read_frame_sample_log(spark: SparkSession, frames_dir: str) -> DataFrame:
@@ -1614,15 +1528,15 @@ def read_frame_sample_log(spark: SparkSession, frames_dir: str) -> DataFrame:
     frames — the walk is deterministic in the payload, so distinct on
     the full row collapses the duplicate attestations. Empty (never
     raising) before the stream's first batch commits."""
-    return _read_or_empty(spark, frames_dir, _FRAMES_DDL).distinct()
+    return resolve_state(spark, frames_dir, _FRAMES_DDL).distinct()
 
 
 def read_feature_log(spark: SparkSession, features_dir: str) -> DataFrame:
     """The accumulated feature table, distinct (a re-fed media file
     re-emits its deterministic features), readable in the by-batch AND
-    the compacted layout — the root-path read the harness used before
-    breaks once a maintenance fold runs."""
-    return _read_or_empty(spark, features_dir, _FEATURES_DDL).distinct()
+    the compacted layout — a root-path read breaks once a maintenance
+    fold runs."""
+    return resolve_state(spark, features_dir, _FEATURES_DDL).distinct()
 
 
 def run_streaming_warc_extract(
@@ -1632,8 +1546,8 @@ def run_streaming_warc_extract(
     compact_every: "int | None" = None,
     hrefs_dir: "str | None" = None,
 ):
-    """Continuous crawl ingest (round 17): as WARC files land in the
-    lake, each micro-batch runs the from-the-spec walker
+    """Continuous crawl ingest: as WARC files land in the lake, each
+    micro-batch runs the from-the-spec walker
     (operators/warc.py:warc_records) over the NEW payloads only and
     appends their typed record rows — the very first step of a crawl
     pipeline, feeding the streaming dedup/quality family downstream.
@@ -1647,84 +1561,54 @@ def run_streaming_warc_extract(
     1000-executor cluster chews a crawl dump as it arrives instead of
     re-walking the lake nightly.
 
-    ``hrefs_dir`` (round 18) additionally lands each batch's raw
-    anchor feed (operators/warc.py:warc_hrefs — (doc_id, seq,
-    src_host, href), deterministic per payload) in the same
-    by-batch/compacted layout; ``read_warc_link_graph`` and
-    ``read_warc_frontier`` fold the accumulated log through the SAME
-    resolve_links/canonical_urls expressions the registered batch keys
-    use — the continuous link graph and crawl frontier."""
+    ``hrefs_dir`` additionally lands each batch's raw anchor feed
+    (operators/warc.py:warc_hrefs — (doc_id, seq, src_host, href),
+    deterministic per payload) in the same by-batch/compacted layout;
+    ``read_warc_link_graph`` and ``read_warc_frontier`` fold the
+    accumulated log through the SAME resolve_links/canonical_urls
+    expressions the registered batch keys use — the continuous link
+    graph and crawl frontier."""
     from micmac_li3ds_spark.operators.warc import (
+        WARC_HREF_DDL,
         WARC_RECORD_DDL,
         warc_records,
+        warc_records_with_hrefs,
     )
 
     def warc_batch(batch_df: DataFrame, batch_id: int) -> None:
         fname = F.element_at(F.split("path", "/"), -1)
-        # no leading zeros: '007.warc' and '7.warc' would map to the
-        # same file_id=7 and silently merge their records under
-        # read_warc_record_log's distinct() (ADVICE r17 #4) — each
-        # file_id has exactly one canonical name
-        ok = fname.rlike(r"^(0|[1-9]\d*)\.warc(\.gz)?$")
         files = batch_df.select(
-            F.when(
-                ~ok,
-                F.raise_error(
-                    F.concat(
-                        F.lit(
-                            "run_streaming_warc_extract: file name "
-                            "violates the <file_id>.warc[.gz] lake "
-                            "contract: "
-                        ),
-                        fname,
-                    )
-                ).cast("long"),
-            )
-            .otherwise(F.regexp_extract(fname, r"^(\d+)", 1).cast("long"))
-            .alias("file_id"),
+            _lake_id_expr(
+                fname, "run_streaming_warc_extract", "file_id",
+                r"warc(\.gz)?", "warc[.gz]",
+            ),
             fname.endswith(".gz").alias("gz"),
             F.col("content").alias("payload"),
         )
-        specs = [(records_dir, WARC_RECORD_DDL)]
         if hrefs_dir is None:
-            warc_records(files).write.mode("overwrite").parquet(
-                f"{records_dir}/batch={batch_id}"
+            write_batch(warc_records(files), records_dir, batch_id)
+            return
+        # ONE walk of each payload: the combined kind-tagged frame is
+        # persisted across the two filtered writes, so the parse/gunzip
+        # cost is paid once, not per output
+        combined = warc_records_with_hrefs(files).persist()
+        try:
+            records = combined.filter(F.col("kind") == "rec").select(
+                "file_id", "rec_idx", "warc_type", "target_uri",
+                "http_status", "block_len", "block_sum", "gz",
             )
-        else:
-            from micmac_li3ds_spark.operators.warc import (
-                WARC_HREF_DDL,
-                warc_records_with_hrefs,
+            write_batch(records, records_dir, batch_id)
+            hrefs = combined.filter(F.col("kind") == "href").select(
+                "doc_id", "seq", "src_host", "href"
             )
+            write_batch(hrefs, hrefs_dir, batch_id)
+        finally:
+            combined.unpersist()
 
-            # ONE walk of each payload: the combined kind-tagged frame
-            # is persisted across the two filtered writes, so the
-            # parse/gunzip cost is paid once, not per output
-            # (code-review r18 #7)
-            combined = warc_records_with_hrefs(files).persist()
-            try:
-                combined.filter(F.col("kind") == "rec").select(
-                    "file_id", "rec_idx", "warc_type", "target_uri",
-                    "http_status", "block_len", "block_sum", "gz",
-                ).write.mode("overwrite").parquet(
-                    f"{records_dir}/batch={batch_id}"
-                )
-                combined.filter(F.col("kind") == "href").select(
-                    "doc_id", "seq", "src_host", "href"
-                ).write.mode("overwrite").parquet(
-                    f"{hrefs_dir}/batch={batch_id}"
-                )
-            finally:
-                combined.unpersist()
-            specs.append((hrefs_dir, WARC_HREF_DDL))
-        auto_compact(
-            batch_df.sparkSession,
-            specs,
-            batch_id,
-            compact_every,
-            owner=checkpoint,
-        )
-
-    return run_foreach_batch(stream, warc_batch, checkpoint)
+    specs = [(records_dir, WARC_RECORD_DDL)]
+    if hrefs_dir is not None:
+        specs.append((hrefs_dir, WARC_HREF_DDL))
+    return _by_batch_job(stream, warc_batch, specs, checkpoint, compact_every)
 
 
 def read_warc_record_log(spark: SparkSession, records_dir: str) -> DataFrame:
@@ -1733,7 +1617,7 @@ def read_warc_record_log(spark: SparkSession, records_dir: str) -> DataFrame:
     compacted generation layout."""
     from micmac_li3ds_spark.operators.warc import WARC_RECORD_DDL
 
-    return _read_or_empty(spark, records_dir, WARC_RECORD_DDL).distinct()
+    return resolve_state(spark, records_dir, WARC_RECORD_DDL).distinct()
 
 
 def read_warc_href_log(spark: SparkSession, hrefs_dir: str) -> DataFrame:
@@ -1743,13 +1627,13 @@ def read_warc_href_log(spark: SparkSession, hrefs_dir: str) -> DataFrame:
     survives as distinct seq values."""
     from micmac_li3ds_spark.operators.warc import WARC_HREF_DDL
 
-    return _read_or_empty(spark, hrefs_dir, WARC_HREF_DDL).distinct()
+    return resolve_state(spark, hrefs_dir, WARC_HREF_DDL).distinct()
 
 
 def read_warc_link_graph(spark: SparkSession, hrefs_dir: str) -> DataFrame:
     """The continuous host-level link graph: the accumulated href log
     through the SAME resolve_links expression q_llm_warc_links uses —
-    streaming ≡ batch is shared code, pinned by the round-18
+    streaming ≡ batch is shared code, pinned by the link-graph
     harness."""
     from micmac_li3ds_spark.operators.warc import resolve_links
 

@@ -1065,22 +1065,28 @@ def test_mkv_lying_anchor_cuetime_falls_back():
 
 
 def test_streaming_media_jobs_enforce_filename_contract(spark, tmp_path):
-    """A lake file violating <media_id>.<ext> — a versioned stem like
-    9000_v2.mkv — must FAIL the batch loudly (code-review r15): before
-    the guard it silently truncated to media_id 9000 and merged two
-    different files' keyframes under one id."""
+    """A lake file violating <media_id>.<ext> must FAIL the batch
+    loudly. A versioned stem like 9000_v2.mkv would otherwise truncate
+    to media_id 9000 and merge two different files' keyframes under
+    one id; a zero-padded stem like 007.mkv would alias 7.mkv the same
+    way (each id has exactly one canonical name, as for WARC lakes)."""
     from micmac_li3ds_spark.streaming import jobs
 
     rows = _rows()
-    lake = tmp_path / "bad_names"
-    lake.mkdir()
-    (lake / "9000.mkv").write_bytes(bytes(rows[0]["payload"]))
-    (lake / "9000_v2.mkv").write_bytes(bytes(rows[1]["payload"]))
-    q = jobs.run_streaming_frame_sample(
-        jobs.read_media_file_stream(spark, str(lake)),
-        str(tmp_path / "frames"),
-        str(tmp_path / "ckpt"),
-    )
-    with pytest.raises(Exception, match="violates the <media_id>"):
-        q.awaitTermination(300)
-        raise AssertionError("stream should have failed")
+    lakes = {
+        "versioned": {"9000.mkv": rows[0], "9000_v2.mkv": rows[1]},
+        "zero_padded": {"007.mkv": rows[0]},
+    }
+    for name, files in lakes.items():
+        lake = tmp_path / name
+        lake.mkdir()
+        for fname, row in files.items():
+            (lake / fname).write_bytes(bytes(row["payload"]))
+        q = jobs.run_streaming_frame_sample(
+            jobs.read_media_file_stream(spark, str(lake)),
+            str(tmp_path / f"frames_{name}"),
+            str(tmp_path / f"ckpt_{name}"),
+        )
+        with pytest.raises(Exception, match="violates the <media_id>"):
+            q.awaitTermination(300)
+            raise AssertionError(f"{name}: stream should have failed")
