@@ -32,7 +32,7 @@ from pyspark.sql.window import Window
 
 from micmac_li3ds_spark.functions.exact import cents
 from micmac_li3ds_spark.registry import register
-from micmac_li3ds_spark.tables import load
+from micmac_li3ds_spark.tables import load, read_parquet
 
 _REPO = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 XML_DIR = os.path.join(_REPO, "fixtures", "xml")
@@ -187,9 +187,9 @@ def q_etl_get_or_create(spark: SparkSession, sf_dir: str) -> DataFrame:
     misses. Re-running with the same input is a no-op (tests assert
     this). At a JDBC sink the same shape runs per micro-batch in
     foreachBatch with a staging-table MERGE."""
-    existing = spark.read.parquet(os.path.join(PQ_DIR, "sensors_existing.parquet"))
-    calib = spark.read.parquet(os.path.join(PQ_DIR, "calibration.parquet"))
-    blocks = spark.read.parquet(os.path.join(PQ_DIR, "block_cameras.parquet"))
+    existing = read_parquet(spark, os.path.join(PQ_DIR, "sensors_existing.parquet"))
+    calib = read_parquet(spark, os.path.join(PQ_DIR, "calibration.parquet"))
+    blocks = read_parquet(spark, os.path.join(PQ_DIR, "block_cameras.parquet"))
     incoming = (
         calib.select(F.col("sensor_name").alias("name"), F.lit("camera").alias("type"))
         .unionByName(
@@ -245,7 +245,7 @@ def q_etl_pose_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rigid-transform application (the reference's pose math): world
     point = R·p + t per camera, written as explicit fused column algebra
     in the same evaluation order as the oracle — bit-identical doubles."""
-    cams = spark.read.parquet(os.path.join(PQ_DIR, "block_cameras.parquet"))
+    cams = read_parquet(spark, os.path.join(PQ_DIR, "block_cameras.parquet"))
     r = F.col("r")
     t = F.col("t")
 
@@ -282,7 +282,7 @@ def q_etl_distortion_poly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distortion-model polynomial evaluation (the reference's per-model
     coefficient sets): Horner fold over the coefficient array at probe
     radii — one higher-order aggregate, any model arity, no UDF."""
-    calib = spark.read.parquet(os.path.join(PQ_DIR, "calibration.parquet"))
+    calib = read_parquet(spark, os.path.join(PQ_DIR, "calibration.parquet"))
     probes = F.array(F.lit(0.01), F.lit(0.25), F.lit(1.0))
     ex = calib.select(
         "sensor_name", "dist_model", "dist_coeffs", F.explode(probes).alias("r2")
@@ -320,7 +320,7 @@ def q_etl_transfo_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-joins — each one shuffle on the frontier key. The oracle is the
     WITH RECURSIVE formulation."""
     edges = (
-        spark.read.parquet(os.path.join(PQ_DIR, "transfo.parquet"))
+        read_parquet(spark, os.path.join(PQ_DIR, "transfo.parquet"))
         .select("source_ref", "target_ref")
         .cache()
     )
@@ -372,7 +372,7 @@ def q_etl_transfo_closure_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-iteration shuffle is on the frontier key either way; the CTE
     form additionally lets the engine stop exactly at the fixpoint
     instead of probing an empty frontier once more."""
-    spark.read.parquet(os.path.join(PQ_DIR, "transfo.parquet")).select(
+    read_parquet(spark, os.path.join(PQ_DIR, "transfo.parquet")).select(
         "source_ref", "target_ref"
     ).createOrReplaceTempView("transfo_edges")
     return spark.sql(

@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from micmac_li3ds_spark.registry import register
+from micmac_li3ds_spark.tables import read_parquet
 
 # The mapInPandas closures below reference module-level decoders
 # (_decode_stub / _decode_pil_image). cloudpickle serializes globals of
@@ -84,35 +85,35 @@ MEDIA_TIFF_PARQUET = os.path.join(
 
 
 def load_media(spark: SparkSession) -> DataFrame:
-    return spark.read.parquet(MEDIA_PARQUET)
+    return read_parquet(spark, MEDIA_PARQUET)
 
 
 def load_media_bmp(spark: SparkSession) -> DataFrame:
-    return spark.read.parquet(MEDIA_BMP_PARQUET)
+    return read_parquet(spark, MEDIA_BMP_PARQUET)
 
 
 def load_media_ppm(spark: SparkSession) -> DataFrame:
-    return spark.read.parquet(MEDIA_PPM_PARQUET)
+    return read_parquet(spark, MEDIA_PPM_PARQUET)
 
 
 def load_media_wav(spark: SparkSession) -> DataFrame:
-    return spark.read.parquet(MEDIA_WAV_PARQUET)
+    return read_parquet(spark, MEDIA_WAV_PARQUET)
 
 
 def load_media_png(spark: SparkSession) -> DataFrame:
-    return spark.read.parquet(MEDIA_PNG_PARQUET)
+    return read_parquet(spark, MEDIA_PNG_PARQUET)
 
 
 def load_media_gif(spark: SparkSession) -> DataFrame:
-    return spark.read.parquet(MEDIA_GIF_PARQUET)
+    return read_parquet(spark, MEDIA_GIF_PARQUET)
 
 
 def load_media_mp4(spark: SparkSession) -> DataFrame:
-    return spark.read.parquet(MEDIA_MP4_PARQUET)
+    return read_parquet(spark, MEDIA_MP4_PARQUET)
 
 
 def load_media_aiff(spark: SparkSession) -> DataFrame:
-    return spark.read.parquet(MEDIA_AIFF_PARQUET)
+    return read_parquet(spark, MEDIA_AIFF_PARQUET)
 
 
 @register(
@@ -2205,7 +2206,7 @@ def q_mm_header_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def load_media_tiff(spark: SparkSession) -> DataFrame:
-    return spark.read.parquet(MEDIA_TIFF_PARQUET)
+    return read_parquet(spark, MEDIA_TIFF_PARQUET)
 
 
 def _packbits_decode(data: bytes, expected: int) -> bytes:
@@ -2528,7 +2529,7 @@ MEDIA_MKV_PARQUET = os.path.join(
 
 
 def load_media_mkv(spark: SparkSession) -> DataFrame:
-    return spark.read.parquet(MEDIA_MKV_PARQUET)
+    return read_parquet(spark, MEDIA_MKV_PARQUET)
 
 
 class _MkvSeekNonConformant(ValueError):

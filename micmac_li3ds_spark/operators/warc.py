@@ -49,6 +49,7 @@ import zlib
 from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import register
+from ..tables import read_parquet
 
 _REPO = os.path.dirname(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -63,7 +64,7 @@ WARC_RECORD_DDL = (
 
 
 def load_warc(spark: SparkSession) -> DataFrame:
-    return spark.read.parquet(WARC_PARQUET)
+    return read_parquet(spark, WARC_PARQUET)
 
 
 def split_gzip_members(payload: bytes) -> "list[bytes]":

@@ -32,6 +32,7 @@ from micmac_li3ds_spark.streaming.compaction import (
     resolve_state,
     write_batch,
 )
+from micmac_li3ds_spark.tables import NANOS_AS_LONG, read_parquet, table_path
 
 # Stateful-processor closures below reference module-level helpers
 # (fold_session_events); cloudpickle ships globals of importable
@@ -48,41 +49,23 @@ try:
 except Exception:  # pragma: no cover
     pass
 
-def _events_stream_schema(ts_type: T.DataType) -> T.StructType:
-    return T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", ts_type),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
-
-
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-streaming source over the events parquet: one file = one
     micro-batch here; at scale this is a directory fed by an ingest
-    job, or Kafka. Streaming readers never infer, so we probe the ts
-    physical encoding with a one-file batch read (ns-as-long vs
-    timestamp[us], see tables.load) and declare the matching schema;
-    the conversion to session-tz TimestampType mirrors tables.load."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    import os
-
-    ts_type = (
-        spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-        .schema["ts"]
-        .dataType
-    )
+    job, or Kafka. Streaming readers never infer, so we declare the
+    file's schema as ``tables.read_parquet`` resolved it (memoized per
+    file version), which also tells the ts physical encoding (ns-as-long
+    vs timestamp[us], see tables.load); the conversion to session-tz
+    TimestampType mirrors tables.load."""
+    spark.conf.set(NANOS_AS_LONG, "true")
+    schema = read_parquet(spark, table_path(sf_dir, "events")).schema
     raw = (
-        spark.readStream.schema(_events_stream_schema(ts_type))
+        spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .option("pathGlobFilter", "events.parquet")  # stream source must be a dir
         .parquet(sf_dir)
     )
-    if isinstance(ts_type, T.LongType):
+    if isinstance(schema["ts"].dataType, T.LongType):
         return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return raw.withColumn("ts", F.col("ts").cast("timestamp"))
 

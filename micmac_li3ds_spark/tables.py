@@ -1,13 +1,29 @@
 """Typed access to the driver corpus (TESTDATA.md / FIXTURES.md §1).
 
-One parquet file per table. Schemas are carried by parquet; we still
+One parquet file per table. Parquet carries the schema; we still
 declare expected column sets so a drifted corpus fails fast rather than
-mid-query. Scans go through ``spark.read.parquet`` → DataSource V2, which
-gives us predicate pushdown + column pruning for free (SURVEY.md §4).
+mid-query. Scans go through the parquet DataSource, which gives
+predicate pushdown and column pruning for free.
+
+Schemas are resolved once per file version. ``spark.read.parquet`` with
+no schema runs a Spark job to infer it from the footer, 70-90 ms per
+call; ``read_parquet`` infers a single file's schema on its first read
+and hands that schema back to ``spark.read.schema(...)`` afterwards,
+which starts no job. The memo is keyed by absolute path and checked
+against ``(st_ino, st_size, st_mtime_ns)`` plus the session's
+``spark.sql.legacy.parquet.nanosAsLong`` (the one conf that changes
+what inference returns for these files): a rewritten file or a changed
+conf is inferred again. It holds a Python ``StructType`` per path and
+nothing else, no JVM object and no data, so it outlives a stopped
+session: a catalog, not a result cache. The inferred schema stays the
+source of truth. Declaring ``StructType``s by hand instead would turn a
+column missing from the file into a column of nulls and lose the drift
+check.
 
 100 TB note: at scale these would be partitioned tables (events by date,
 lineitem by shipdate month) registered in a metastore; the loaders keep
-that behind one function so call sites don't change.
+that behind one function so call sites don't change. Directories are
+read with plain ``spark.read.parquet``.
 """
 
 from __future__ import annotations
@@ -16,7 +32,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType
+from pyspark.sql.types import LongType, StructType
 
 TABLES = (
     "region",
@@ -67,12 +83,42 @@ EXPECTED_COLUMNS = {
 }
 
 
+NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+
+# absolute path -> (stat signature + nanosAsLong, inferred schema)
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
+
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers a file's schema once per
+    file version (see the module docstring); directories are read as is."""
+    path = os.path.abspath(path)
+    if os.path.isdir(path):
+        return spark.read.parquet(path)
+    # stat before inferring: a rewrite in between leaves an entry whose
+    # key no longer matches, which costs one more inference, never a
+    # stale schema
+    st = os.stat(path)
+    key = (st.st_ino, st.st_size, st.st_mtime_ns, spark.conf.get(NANOS_AS_LONG, "false"))
+    hit = _SCHEMAS.get(path)
+    if hit is not None and hit[0] == key:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[path] = (key, df.schema)
+    return df
+
+
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one corpus table; fail fast on schema drift.
+    """Load one corpus table through ``read_parquet``; fail fast on
+    schema drift.
+
+    The drift check and the ``events.ts`` branch read the memoized
+    schema, which is the inferred schema of the same file version, so
+    the ts encoding is probed once per file version, not once per call.
 
     ``events.ts`` has shipped in two physical encodings across corpus
     generations: parquet timestamp[ns] (which Spark 4 refuses to read as a
@@ -80,15 +126,14 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     legacy conf and floor-convert, the same truncation direction DuckDB's
     ns→µs cast uses) and parquet timestamp[us] (read natively as
     TIMESTAMP_NTZ). Either way we normalize to session-tz TimestampType
-    (session tz is pinned UTC, session.py:35) so every downstream operator
-    and oracle sees one ts type regardless of corpus vintage (SURVEY.md
-    §5.3).
+    (session tz is pinned UTC, session.py) so every downstream operator
+    and oracle sees one ts type regardless of corpus vintage.
     """
     if name not in EXPECTED_COLUMNS:
         raise KeyError(f"unknown table {name!r}; known: {sorted(EXPECTED_COLUMNS)}")
     if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(table_path(sf_dir, name))
+        spark.conf.set(NANOS_AS_LONG, "true")
+        df = read_parquet(spark, table_path(sf_dir, name))
         ts_type = df.schema["ts"].dataType
         if isinstance(ts_type, LongType):
             # integer `div`, NOT `/`: float division of an epoch-ns long
@@ -99,7 +144,7 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # the UTC session tz (no-op if already TimestampType)
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     else:
-        df = spark.read.parquet(table_path(sf_dir, name))
+        df = read_parquet(spark, table_path(sf_dir, name))
     missing = EXPECTED_COLUMNS[name] - set(df.columns)
     if missing:
         raise ValueError(f"table {name} missing expected columns: {sorted(missing)}")
