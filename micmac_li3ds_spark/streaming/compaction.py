@@ -65,7 +65,10 @@ parallel job; ``num_files`` sizes the output (defaults to one file per
 ``spark.sql.shuffle.partitions`` worth of input dirs, min 1 — callers
 with byte-size targets pass an explicit count). File count after
 compaction is num_files + O(batches since last compaction), bounded by
-compaction cadence instead of feed lifetime.
+compaction cadence instead of feed lifetime. A keyed fold sizes its
+bucket count from the bytes it reads (``sized_buckets``): one bucket
+per scan split, so small state stays one plain file and large state
+buckets as finely as a scan would split it anyway.
 """
 
 from __future__ import annotations
@@ -74,6 +77,8 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from micmac_li3ds_spark.session import shuffle_partitions
 
 SRC_BATCH_COL = "src_batch"
 BUCKET_COL = "pb"
@@ -98,6 +103,27 @@ def bucket_expr(col_name: str, n_buckets: int):
     hash), so buckets computed at read time match the layout written
     at compaction time."""
     return F.pmod(F.xxhash64(F.col(col_name)), F.lit(n_buckets)).cast("int")
+
+
+def _data_bytes(spark, fs, uris: "list[str]") -> int:
+    """Bytes stored under ``uris``: one FileSystem content summary per
+    dir, no Spark job and no per-file round trip. Checksum files are
+    not counted, so this is what a scan of ``uris`` reads."""
+    Path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+    return sum(fs.getContentSummary(Path(u)).getLength() for u in uris)
+
+
+def sized_buckets(spark: SparkSession, input_bytes: int) -> int:
+    """The bucket count of a keyed fold that reads ``input_bytes``:
+    ⌈input_bytes / spark.sql.files.maxPartitionBytes⌉, at least 1, so
+    a bucket is at most one scan split. Below one split a bucketed
+    layout cannot prune anything a single-file read would not: a batch
+    of k keys touches B·(1 − e^(−k/B)) of B buckets, which is nearly
+    all of them once k ≳ B, while every read pays a bucket-id collect
+    job and a listing of B directories. At 1, the fold writes the plain
+    generation."""
+    split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    return max(1, -(-input_bytes // split))
 
 
 def _write_meta(spark, fs, path: str, g: int, meta: dict) -> None:
@@ -389,7 +415,7 @@ def compact_state_dir(
     num_files: "int | None" = None,
     up_to: "int | None" = None,
     bucket_by: "str | None" = None,
-    n_buckets: int = 64,
+    n_buckets: "int | None" = None,
     min_src_batch: "int | None" = None,
     lease_owner: "str | None" = None,
 ) -> dict:
@@ -430,6 +456,15 @@ def compact_state_dir(
     adopts the previous generation's ``_GEN_META`` settings (or plain
     when there is none) — resolved UNDER the lease, so a concurrent
     fold cannot change the layout between the decision and the write.
+
+    ``n_buckets=None`` sizes the bucketed layout from the bytes the
+    fold reads — the previous generation plus the folded batch dirs,
+    listed through the FileSystem API — with ``sized_buckets``: one
+    bucket per ``spark.sql.files.maxPartitionBytes`` split. When that
+    is 1 the fold writes the plain generation instead (no
+    ``_GEN_META``, so no bucket-id collect on later reads); the
+    summary reports the measured ``input_bytes``. An explicit
+    ``n_buckets`` always buckets with that count.
     ``lease_owner`` — see ``_acquire_lease``."""
     fs, hpath = _fs(spark, path)
     if not fs.exists(hpath):
@@ -484,6 +519,14 @@ def _compact_under_lease(
             "folded_batches": 0,
             "up_to": prev_up_to,
         }
+    input_bytes = None
+    if bucket_by is not None and n_buckets is None:
+        input_bytes = _data_bytes(
+            spark, fs, ([newest[1]] if newest else []) + list(fold.values())
+        )
+        n_buckets = sized_buckets(spark, input_bytes)
+        if n_buckets == 1:
+            bucket_by = None
 
     gen_ddl = f"{ddl}, {SRC_BATCH_COL} long"
     parts = []
@@ -537,10 +580,7 @@ def _compact_under_lease(
         )
     else:
         if num_files is None:
-            shuffle = int(
-                spark.conf.get("spark.sql.shuffle.partitions", "200")
-            )
-            num_files = max(1, len(fold) // max(1, shuffle))
+            num_files = max(1, len(fold) // max(1, shuffle_partitions(spark)))
         merged.coalesce(num_files).write.mode("overwrite").parquet(gen_dir)
         # a CRASHED bucketed attempt at this same generation id left a
         # _GEN_META_<g>; committing an unbucketed retry under it would
@@ -579,6 +619,8 @@ def _compact_under_lease(
         out["n_buckets"] = n_buckets
     else:
         out["num_files"] = num_files
+    if input_bytes is not None:
+        out["input_bytes"] = input_bytes
     if dropped_rows is not None:
         out["dropped_rows"] = dropped_rows
         out["min_src_batch"] = min_src_batch
@@ -723,9 +765,11 @@ def auto_compact(
     folds all committed batches every ``every`` micro-batches (no-op
     when ``every`` is None). A spec with a key is MATCHING state (the
     exact-dedup fingerprints, LSH shingle/band state, SemDeDup
-    vectors): its generation is hash-bucketed on the key for the
-    pruned semi-join reads, and it ages out under ``horizon_batches``.
-    A spec without a key is an emitted output log, never bounded.
+    vectors): its generation is sized from its bytes
+    (``sized_buckets``) — one plain file while it fits one scan split,
+    hash-bucketed on the key for pruned semi-join reads beyond that —
+    and it ages out under ``horizon_batches``. A spec without a key is
+    an emitted output log, never bounded.
 
     Safe inside the batch that also wrote state: a crash between this
     fold and the checkpoint commit replays the batch, whose

@@ -1046,9 +1046,10 @@ def run_streaming_exact_dedup(
     fingerprint is a dup, not a new keeper — identical to the batch
     min-doc_id rule whenever feeding order is doc_id-ascending per
     fingerprint (the harness double-import corpus satisfies it; the
-    divergence is documented, not hidden). At scale ``seen_dir``
-    would be bucketed by fingerprint prefix so the anti-join prunes
-    files — the same layout argument as the LSH band state.
+    divergence is documented, not hidden). Once ``seen_dir`` outgrows
+    one scan split, its folds bucket it by fingerprint
+    (``compaction.sized_buckets``) so the anti-join prunes files — the
+    same layout as the LSH band state.
     ``compact_every=N`` folds both state dirs into a generation every
     N micro-batches (streaming/compaction.py; the generation's
     src_batch column preserves the strictly-earlier replay rule).

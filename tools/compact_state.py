@@ -17,14 +17,17 @@ Usage:
         [--bucket-by COL] [--n-buckets N] [--min-src-batch K]
         [--count-only]
 
-Layout flags: ``--bucket-by``/``--n-buckets`` select the hash-bucketed
-generation layout the in-stream cadence writes for its file-pruned
-state joins. When NEITHER is given, the previous generation's
+Layout flags: ``--bucket-by COL`` selects the hash-bucketed generation
+layout for file-pruned state joins. Without ``--n-buckets`` the bucket
+count is sized from the bytes the fold reads, by the same rule the
+in-stream cadence uses (``compaction.sized_buckets``: one bucket per
+``spark.sql.files.maxPartitionBytes`` split; state that fits one split
+is written as a plain generation). ``--n-buckets N`` forces N buckets.
+When ``--bucket-by`` is not given, the previous generation's
 ``_GEN_META`` settings are reused — so running the CLI on a dir the
 stream keeps bucketed (seen/fp, bands/band_key, vectors/cid) preserves
-the pruning layout instead of silently rewriting it unbucketed
-(ADVICE r16 #3). Pass ``--bucket-by ''`` to force an unbucketed
-rewrite explicitly.
+the pruning layout instead of silently rewriting it unbucketed. Pass
+``--bucket-by ''`` to force an unbucketed rewrite explicitly.
 
 ``--min-src-batch K`` is the retention horizon: state rows first
 written under a batch id < K are dropped and the count reported
@@ -34,9 +37,8 @@ newest batch's checkpoint committed will replay that batch on
 restart, and the replay re-reads state. Keep K at or below
 (newest batch id − the job's read window) — for a job running
 ``horizon_batches=H`` that is ``newest − H``, the same one-behind lag
-the in-stream cadence applies automatically (code-review r18 #1) —
-or confirm the stream's last batch is committed before folding
-deeper. Cumulative drops persist in the dir's ``_RETENTION`` record
+the in-stream cadence applies automatically — or confirm the stream's
+last batch is committed before folding deeper. Cumulative drops persist in the dir's ``_RETENTION`` record
 (``compaction.read_retention``).
 
 ``--count-only`` prints the current data-file count and exits — the
@@ -66,7 +68,13 @@ def main() -> None:
         help="hash-bucket the generation on this column (default: reuse "
         "the previous generation's _GEN_META layout; '' forces unbucketed)",
     )
-    ap.add_argument("--n-buckets", type=int, default=None)
+    ap.add_argument(
+        "--n-buckets",
+        type=int,
+        default=None,
+        help="bucket count (default: one per maxPartitionBytes split of "
+        "the bytes the fold reads)",
+    )
     ap.add_argument(
         "--min-src-batch",
         type=int,
@@ -98,7 +106,7 @@ def main() -> None:
     # maintenance run cannot silently drop the stream's file-pruning
     # bucketing. Resolved INSIDE compact_state_dir under the fold's
     # lease — a pre-read here could go stale if the in-stream cadence
-    # folds between the read and the lease (code-review r17 #3).
+    # folds between the read and the lease.
     bucket_by = args.bucket_by
     if bucket_by is None:
         bucket_by = C.INHERIT_LAYOUT
@@ -112,7 +120,7 @@ def main() -> None:
         num_files=args.num_files,
         up_to=args.up_to,
         bucket_by=bucket_by,
-        n_buckets=args.n_buckets if args.n_buckets is not None else 64,
+        n_buckets=args.n_buckets,
         min_src_batch=args.min_src_batch,
     )
     res["data_files_after"] = C.state_file_count(spark, args.dir)
