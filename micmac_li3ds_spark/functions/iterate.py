@@ -1,93 +1,174 @@
-"""Restartable driver-loop iteration state.
+"""One driver for every iterative fixpoint: :func:`fixpoint`.
 
-The three iterative fixpoints (pagerank_fixpoint converged mode,
-cc_fixpoint / q_graph_cc, q_er_resolve's pointer-jumping CC) carry
-per-round state on eager ``localCheckpoint``: O(1) plan depth, blocks
-stored on executors, NOT replayable — if an executor holding checkpoint
-blocks dies, the lineage that could recompute them has been truncated
-by design, and on a real cluster the JOB fails and the loop restarts
-from round 0. That is the correct default: rounds are minutes, loops
-are O(log d) rounds, and local checkpoints are RAM/disk-local writes
-with zero replication cost.
+The graph and dedup operators (connected components, k-core peeling,
+BFS, PageRank, the transfo closure) are driver-side loops over a small
+per-round state frame. ``fixpoint`` owns everything a round needs
+besides its own plan:
 
-When rounds are expensive enough that restart-from-zero is not
-acceptable, the escape hatch is DURABLE per-round state: a parquet
-round-trip per iteration to shared storage. ``DurableLoopState``
-implements it with the write-then-commit protocol:
+* **materialisation.** Each round is stored once. By default that is an
+  eager ``localCheckpoint``: O(1) plan depth, blocks kept on executors,
+  and NOT replayable. If an executor holding a round's blocks dies, the
+  lineage that could recompute them is gone by design, so the job fails
+  and the loop restarts from round 0. That is the right default: loops
+  run O(log d) rounds and a local checkpoint costs no replication.
+  Passing a :class:`DurableLoopState` stores each round as a committed
+  parquet round instead, and a later call with the same state resumes
+  from the highest committed round (SCALE.md §15).
+* **the stop test.** The aggregates a loop stops on (a changed-label
+  count, a row count, an L1 residual) are read with ``df.observe`` on
+  the round's own materialising job, never by a second action. The
+  ``CollectMetrics`` node lands in the result stage, above every
+  exchange, and Spark applies a result task's accumulator updates once
+  per partition even when the task is retried, so the read is exact.
+  A separate ``count()`` cost 2 Spark jobs per round: cc_fixpoint on a
+  256-node chain launches 56 jobs against 74 (9 rounds, 4-core local
+  session, AQE on).
+* **release.** A superseded round's checkpoint blocks are freed as soon
+  as its successor is materialised, so executor storage holds O(1)
+  rounds however long the loop runs.
+* **the accumulate-frontier shape.** With ``accumulate=True`` each
+  round produces only a new frontier and the result is the union of
+  all frontiers. Every ``CONSOLIDATE_EVERY`` rounds the older frontiers
+  are collapsed into one checkpoint, which caps the union's plan width.
 
-  * round k writes ``<dir>/round=k`` (parquet, executor-parallel), then
-    the driver creates the empty marker ``<dir>/_COMMIT_k``;
-  * resume = read the highest committed round. A crash between write
-    and commit leaves a dangling uncommitted directory that is simply
-    overwritten on retry — markers make the commit atomic at the
-    filesystem's create granularity, so a restarted driver can NEVER
-    observe a half-written round (parquet _SUCCESS only covers the
-    write side; the marker covers the loop's notion of "round done").
-
-Every filesystem operation (mkdirs, marker create/list/delete, round
-pruning) goes through Spark's Hadoop FileSystem API resolved FROM THE
-STATE DIR'S OWN SCHEME, not through driver-local ``os``/``open`` calls.
-This is what makes the durability claim true on the only deployments
-where it matters: with an ``s3a://`` / ``hdfs://`` state dir, the
-markers land NEXT TO the parquet data, so a driver restarted on a
-different host sees exactly the committed rounds the dead driver wrote.
-(The earlier implementation used POSIX calls for the markers — on
-shared storage they would have landed on the old driver's local disk,
-silently breaking resume-after-failover; flagged by round-8 advice.)
-
-RETENTION: loops on 100-TB graphs run tens of rounds; keeping every
-round's parquet forever turns 16 GB of vertex state into an unbounded
-O(rounds) heap of dead files. ``retain`` (default 2) keeps the last k
-COMMITTED rounds and prunes older ones after each commit — marker
-first, then data, so a crash mid-prune can only leave an unreferenced
-data directory (garbage, never a committed round with missing data).
-Resume after pruning is proven by
-tests/test_round7_mining.py::test_cc_fixpoint_restarts_from_durable_state
-and the round-9 retention tests.
-
-Cost model at 100 TB: vertex-state DataFrames (node, label/rank) are
-tiny relative to the edge data — 10⁹ nodes × 16 B ≈ 16 GB per round,
-a seconds-long parallel write to object storage — so durability costs
-one parquet round-trip per round while the dominant per-round cost
-(the edge join) is unchanged, and retention caps the storage footprint
-at retain × one round's state.
+Durable rounds: round k writes ``<dir>/round=k`` (parquet, executor-
+parallel), then the driver creates the empty marker ``<dir>/_COMMIT_k``.
+Resume reads the highest committed round. A crash between write and
+commit leaves an uncommitted directory that a retry overwrites, so a
+restarted driver never observes a half-written round. Every filesystem
+operation goes through the Hadoop FileSystem of the state dir's own
+scheme, so with an ``s3a://`` or ``hdfs://`` dir the markers land next
+to the data and a driver restarted on another host sees the same
+committed rounds. ``retain`` (default 2) keeps the newest committed
+rounds and prunes older ones after each commit: 10⁹ nodes × 16 B is
+about 16 GB of vertex state per round, so retention caps the footprint
+at ``retain`` rounds while the dominant per-round cost (the edge join)
+is unchanged.
 """
 
 from __future__ import annotations
 
 import re
+from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
+
+from micmac_li3ds_spark.functions.cache_scope import scoped_release
+
+# union-width cap of the accumulate shape: consolidate every K rounds
+CONSOLIDATE_EVERY = 64
+
+
+def fixpoint(
+    init: DataFrame,
+    step: Callable[..., DataFrame],
+    *,
+    observe: dict[str, Column] | None = None,
+    until: Callable[[dict | None, dict], bool] | None = None,
+    rounds: int | None = None,
+    state: DurableLoopState | None = None,
+    fail_after: int | None = None,
+    accumulate: bool = False,
+) -> tuple[DataFrame, int]:
+    """Iterate ``step`` from ``init``; return (final frame, rounds run
+    by THIS call).
+
+    ``init`` is stored as round 0 and each ``step(prev)`` output as the
+    next round. ``observe`` names aggregates read on each round's
+    materialising job; ``until(prev, cur)`` gets those dicts for the
+    previous round (None right after a resume) and the new one, and
+    ends the loop when true. ``init`` and every step output share one
+    schema: columns whose names start with ``_`` exist only for
+    ``observe`` and are dropped before the round is stored. ``rounds``
+    caps the loop; with no ``until`` it runs exactly that many rounds.
+
+    ``state`` stores rounds durably and resumes from its newest
+    committed round. ``fail_after`` is the crash-simulation hook: it
+    raises after that many committed rounds if the loop has not
+    stopped.
+
+    ``accumulate=True`` calls ``step(frontier, union)`` and returns the
+    union of ``init`` and every non-empty frontier; the loop stops at
+    the first empty frontier. The union is released when the next
+    registered query starts (registered callers collect it first);
+    direct library callers own it."""
+    if accumulate:
+        observe = {"n": F.count(F.lit(1))}
+        until = lambda _prev, cur: cur["n"] == 0  # noqa: E731
+    resumed = state.latest_round() if state is not None else None
+    if resumed is None:
+        start = 0
+        cur, seen = _store(init, 0, state, observe)
+    else:
+        start, cur, seen = resumed, state.load(resumed), None
+    acc = cur  # accumulate: the union of init and every frontier
+    n = 0
+    while rounds is None or n < rounds:
+        n += 1
+        nxt, now = _store(
+            step(cur, acc) if accumulate else step(cur), start + n, state, observe
+        )
+        done = until is not None and until(seen, now)
+        seen = now
+        if accumulate:
+            if done:
+                unpersist_local_checkpoint(nxt)  # the empty last frontier
+                break
+            if n % CONSOLIDATE_EVERY == 0:
+                # collapse the older frontiers into one checkpoint; the
+                # new frontier stays its own leaf for the next step
+                old, acc = acc, _store(acc, 0, None, None)[0]
+                unpersist_local_checkpoint(old)
+            acc = acc.unionByName(nxt)
+        elif state is None:
+            unpersist_local_checkpoint(cur)
+        cur = nxt
+        if fail_after is not None and n >= fail_after and not done:
+            raise RuntimeError(
+                f"simulated driver crash after {n} committed rounds"
+                f" (fail_after={fail_after}: a simulated crash; resume"
+                " from the state dir)"
+            )
+        if done:
+            break
+    if not accumulate:
+        return cur, n
+    scoped_release(lambda: unpersist_local_checkpoint(acc))
+    return acc, n
+
+
+def _store(
+    df: DataFrame, k: int, state: DurableLoopState | None, observe
+) -> tuple[DataFrame, dict | None]:
+    """Materialise round ``k``; return it with its observed aggregates."""
+    obs = Observation() if observe else None
+    if obs is not None:
+        df = df.observe(obs, *[c.alias(name) for name, c in observe.items()])
+    df = df.drop(*[c for c in df.columns if c.startswith("_")])
+    if state is not None:
+        out = state.save(df, k)
+    else:
+        out = df.localCheckpoint(eager=True)
+    return out, obs.get if obs is not None else None
 
 
 def unpersist_local_checkpoint(df: DataFrame) -> None:
-    """Free the executor blocks of a SUPERSEDED localCheckpoint'd frame
-    deterministically (ADVICE r13 #3). ``DataFrame.unpersist()`` is a
-    no-op here — checkpoint blocks belong to the internal RDD Spark
-    materialized, not to the plan cache — so without this, every
-    superseded round's blocks stay on executors until driver GC
-    happens to collect the py4j references: storage grows linearly
-    with convergence rounds on large graphs. The analyzed plan of a
-    localCheckpoint result IS the ``LogicalRDD`` wrapping the persisted
-    internal RDD; unpersist that RDD directly (non-blocking — the
-    caller has already materialized its successor, so the blocks are
-    garbage the moment this returns).
+    """Free the executor blocks of a SUPERSEDED localCheckpoint'd frame.
+    ``DataFrame.unpersist()`` is a no-op here: checkpoint blocks belong
+    to the internal RDD Spark materialised, not to the plan cache, so
+    without this every superseded round's blocks stay on executors until
+    driver GC collects the py4j references. Walks the analyzed plan and
+    unpersists EVERY ``LogicalRDD`` it reaches (non-blocking), so a
+    projection or a union over checkpoints frees all of them.
 
-    Only ever call this on a frame the loop has REPLACED: a local
-    checkpoint's lineage is truncated by design, so its blocks cannot
-    be recomputed after unpersisting.
+    Only call this on frames whose checkpoints the caller exclusively
+    owns and has REPLACED: a local checkpoint's lineage is truncated by
+    design, so its blocks cannot be recomputed after unpersisting.
 
-    Best-effort by contract: if a Spark upgrade changes the plan shape
-    the reflection expects, the loop must still converge — driver GC
-    remains the (slower) backstop, exactly the pre-fix behavior.
-
-    r18: walks the analyzed plan and unpersists EVERY ``LogicalRDD``
-    it reaches, instead of assuming the root node is one. cc_fixpoint
-    now returns a two-column projection OVER its final checkpoint (the
-    checkpoint itself carries the loop-internal ``_chg`` column), so
-    the checkpointed RDD sits one Project below the root; the walk
-    frees it either way. Still only call this on frames whose
-    checkpoints the caller exclusively owns."""
+    Best-effort: if a Spark upgrade changes the plan shape the walk
+    expects, the loop must still converge, with driver GC as the slower
+    backstop."""
     try:
         stack = [df._jdf.queryExecution().analyzed()]
         while stack:
@@ -173,7 +254,7 @@ class DurableLoopState:
         for k in committed[: -self.retain]:
             self._fs.delete(self._marker_path(k), False)
             self._fs.delete(self._Path(self._round_path(k)), True)
-        # orphan sweep (ADVICE r9): a crash BETWEEN the marker delete
+        # orphan sweep: a crash BETWEEN the marker delete
         # and the data delete above leaves a markerless round=k dir
         # that committed_rounds() never lists, so the loop above never
         # revisits it — it would sit below the retention horizon

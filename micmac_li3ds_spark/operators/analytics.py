@@ -19,12 +19,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from micmac_li3ds_spark.functions.cache_scope import (
-    scoped_cache,
-    scoped_release,
-)
+from micmac_li3ds_spark.functions.cache_scope import scoped_cache
 from micmac_li3ds_spark.functions.exact import cents, duck_cents, duck_pct, pct
-from micmac_li3ds_spark.functions.iterate import unpersist_local_checkpoint
+from micmac_li3ds_spark.functions.iterate import (
+    fixpoint,
+    unpersist_local_checkpoint,
+)
 from micmac_li3ds_spark.registry import register
 from micmac_li3ds_spark.session import shuffle_partitions
 from micmac_li3ds_spark.tables import load
@@ -823,9 +823,9 @@ def q_graph_pagerank_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     back to edges on the SAME src key the edge dedup grouped on, so
     the contribution join reuses the dedup's partitioning; a full
     multi-iteration run re-enters this exact plan with the previous
-    ranks as input (see q_llm_dedup_clusters for the fixpoint-loop
-    pattern). Ranks round to 6 dp — float association order across
-    engines differs below that."""
+    ranks as input (see pagerank_converged for the fixpoint loop).
+    Ranks round to 6 dp — float association order across engines
+    differs below that."""
     edges = (
         load(spark, sf_dir, "orders")
         .select("o_orderkey", "o_custkey")
@@ -1102,30 +1102,15 @@ FROM r{k}
     )
 
 
-def pagerank_fixpoint(
-    spark: SparkSession, sf_dir: str, k: int, checkpoint: bool = False
-) -> DataFrame:
-    """k supersteps of fixed-point PageRank (damping 0.85) over the
-    SYMMETRIC customer↔supplier purchase graph (customers = 2·custkey,
-    suppliers = 2·suppkey+1 — the bipartite edge set plus its reverse,
-    so rank actually circulates instead of draining after one hop).
-
-    Determinism across engines AND iteration counts is bought with
-    FIXED-POINT integer arithmetic, not rounding: ranks live in
-    micro-units (10⁶ = rank 1.0) and each superstep is
-    rank' = 150000 + (850 · Σ(rank div outdeg)) div 1000 — pure
-    BIGINT math, so K chained iterations cannot accumulate float-
-    association drift the way the float formulation would (the judge-
-    flagged risk class on q_graph_pagerank_step's rounded SUM). The
-    div truncation loses < 1 micro-rank per edge per step — bounded,
-    deterministic, and irrelevant to ranking order.
-
-    Scale shape per superstep (unchanged from q_graph_pagerank_step):
-    contributions join on src, aggregate by dst — two hash exchanges,
-    vertex-state only. The driver loop chains K superstep PLANS; at
-    real scale each iteration would be checkpointed to cut lineage
-    (localCheckpoint or a parquet round-trip), exactly like q_llm_dedup_clusters'
-    fixpoint loop."""
+def _pagerank_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(src, dst, d) contribution edges of the SYMMETRIC customer↔supplier
+    purchase graph (customers = 2·custkey, suppliers = 2·suppkey+1),
+    d = out-degree of src. Every superstep re-reads this table, and
+    without runtime subtree reuse the orders⋈lineitem build plus the
+    degree aggregation re-ran once per chained superstep (sf0.1, min-of-4
+    noop: q_graph_pagerank_fix 3.95 s → 3.03 s from caching it). It is
+    ``scoped_cache``d so its lineage stays replayable; a caller whose
+    result no longer reads it unpersists it."""
     pairs = (
         load(spark, sf_dir, "orders")
         .select("o_orderkey", "o_custkey")
@@ -1143,56 +1128,70 @@ def pagerank_fixpoint(
         pairs.select(F.col("s").alias("src"), F.col("c").alias("dst"))
     )
     outdeg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
-    # The edge+outdeg table is re-read by EVERY superstep, and with no
-    # runtime subtree reuse the orders⋈lineitem pairs build + degree
-    # aggregation re-ran once per chained superstep — k=6 evaluations
-    # in q_graph_pagerank_fix's single collected plan (r18; measured
-    # min-of-4 noop at sf0.1, matched calm windows: 3.95 s → 3.03 s
-    # from this one cache).
-    # scoped_cache (not localCheckpoint) so lineage stays replayable
-    # and the blocks are released when the next query starts.
-    contrib_edges = scoped_cache(edges.join(outdeg, "src"))
-    # seed from contrib_edges (same src set — the outdeg join is inner
-    # on src, and every edge source has outdeg ≥ 1) so the init scan
-    # reads the cache instead of a third edge-build evaluation
-    ranks = contrib_edges.select("src").distinct().select(
+    return scoped_cache(edges.join(outdeg, "src"))
+
+
+def _pagerank_seed(contrib: DataFrame) -> DataFrame:
+    # every edge source has outdeg ≥ 1, so the inner outdeg join keeps
+    # the full node set and the seed reads the cached table
+    return contrib.select("src").distinct().select(
         F.col("src").alias("node"), F.lit(1000000).cast("long").alias("rank_u")
     )
-    for _ in range(k):
-        prev = ranks
-        ranks = (
-            contrib_edges.join(ranks, contrib_edges.src == ranks.node)
-            .select("dst", F.expr("rank_u div d").alias("contrib"))
-            .groupBy(F.col("dst").alias("node"))
-            .agg(
-                F.expr(
-                    "CAST(150000 + (850 * SUM(contrib)) div 1000 AS BIGINT)"
-                ).alias("rank_u")
+
+
+def _pagerank_step(contrib: DataFrame, ranks: DataFrame) -> DataFrame:
+    return (
+        contrib.join(ranks, contrib.src == ranks.node)
+        .select("dst", F.expr("rank_u div d").alias("contrib"))
+        .groupBy(F.col("dst").alias("node"))
+        .agg(
+            F.expr("CAST(150000 + (850 * SUM(contrib)) div 1000 AS BIGINT)").alias(
+                "rank_u"
             )
         )
-        if checkpoint:
-            # production iteration pattern: truncate lineage each
-            # superstep so plan depth (and recovery cost) stays O(1) in
-            # k instead of chaining k join+agg subtrees — identical
-            # results, asserted in tests/test_round6_ops.py
-            ranks = ranks.localCheckpoint(eager=True)
-            # ...and free the superseded superstep's blocks (r16, the
-            # cc_fixpoint hygiene applied here): no-op on iteration 1,
-            # where prev is the unpersisted seed plan
-            unpersist_local_checkpoint(prev)
-    if checkpoint and k > 0:
-        # the final superstep is a self-contained checkpoint, so the
-        # edge cache has no remaining consumer — free it now instead of
-        # waiting for the next query scope (direct/library callers get
-        # deterministic cleanup; the scope's later release is a no-op).
-        # checkpoint=False must NOT do this: the returned plan still
-        # reads contrib_edges lazily.
-        contrib_edges.unpersist()
+    )
+
+
+def _ranks_out(ranks: DataFrame) -> DataFrame:
     return ranks.select(
         "node",
         "rank_u",
         F.round(F.col("rank_u") / 1000000.0, 6).alias("rank"),
     )
+
+
+def pagerank_fixpoint(
+    spark: SparkSession, sf_dir: str, k: int, checkpoint: bool = False
+) -> DataFrame:
+    """k supersteps of fixed-point PageRank (damping 0.85) over the
+    SYMMETRIC customer↔supplier purchase graph (the bipartite edge set
+    plus its reverse, so rank circulates instead of draining after one
+    hop).
+
+    Determinism across engines AND iteration counts is bought with
+    FIXED-POINT integer arithmetic, not rounding: ranks live in
+    micro-units (10⁶ = rank 1.0) and each superstep is
+    rank' = 150000 + (850 · Σ(rank div outdeg)) div 1000 — pure
+    BIGINT math, so K chained iterations cannot accumulate float-
+    association drift. The div truncation loses < 1 micro-rank per edge
+    per step — bounded, deterministic, and irrelevant to ranking order.
+
+    Each superstep joins contributions on src and aggregates by dst:
+    two hash exchanges, vertex state only. By default the k superstep
+    plans are chained into one plan; ``checkpoint=True`` runs them on
+    ``fixpoint`` instead, so plan depth stays O(1) in k with identical
+    results."""
+    contrib = _pagerank_edges(spark, sf_dir)
+    ranks = _pagerank_seed(contrib)
+    if checkpoint:
+        ranks, _ = fixpoint(ranks, lambda r: _pagerank_step(contrib, r), rounds=k)
+        # the stored ranks no longer read the edge cache; the chained
+        # plan below still does, so only this branch frees it
+        contrib.unpersist()
+    else:
+        for _ in range(k):
+            ranks = _pagerank_step(contrib, ranks)
+    return _ranks_out(ranks)
 
 
 def pagerank_converged(
@@ -1203,22 +1202,14 @@ def pagerank_converged(
 ) -> tuple[DataFrame, int]:
     """PageRank driven to CONVERGENCE: iterate the q_graph_pagerank_fix
     superstep until the RELATIVE L1 residual ‖r' − r‖₁ / ‖r'‖₁ drops
-    below ``eps_rel`` (the classical PageRank stopping criterion —
-    scale-free, unlike an absolute per-node cut, which a single
-    high-in-degree hub's large rank would inflate past any fixed
-    threshold), or ``max_iter``. Returns (ranks DataFrame, iterations
-    executed) — the production form of the fixed-count demo, with the
-    stopping rule the demo's docstring promises.
+    below ``eps_rel`` (the classical stopping criterion — scale-free,
+    unlike an absolute per-node cut, which a single high-in-degree hub
+    would inflate past any fixed threshold), or ``max_iter``. Returns
+    (ranks DataFrame, iterations executed).
 
-    Driver-loop mechanics, each the standard iterate-until-converge
-    pattern at any scale:
-    * the edge/out-degree table is persisted once (it is re-read every
-      superstep);
-    * each iteration localCheckpoints its rank state so plan depth and
-      recovery cost stay O(1) in the iteration count;
-    * the stopping test reads ONE aggregated row per iteration
-      (Σ|Δrank|, Σrank) — a driver-side O(1) read, not a data collect;
-      the rank table itself never leaves the executors.
+    Each superstep's output is joined to the previous ranks, and the two
+    residual sums are observed on the round's own checkpoint job, so the
+    rank table never leaves the executors and no second action runs.
     The integer fixed-point recurrence makes the iterate sequence
     bit-deterministic, so the stopping iteration is reproducible —
     damping 0.85 contracts the residual geometrically, giving
@@ -1226,86 +1217,28 @@ def pagerank_converged(
     (fixed-point truncation adds ≤ 0.85·|E| µ-units of L1 noise per
     step, a vanishing fraction of ‖r‖₁ ≈ n·10⁶ for any graph with
     average degree ≪ 10⁶)."""
-    pairs = (
-        load(spark, sf_dir, "orders")
-        .select("o_orderkey", "o_custkey")
-        .join(
-            load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey"),
-            F.col("o_orderkey") == F.col("l_orderkey"),
-        )
-        .select(
-            (F.col("o_custkey") * 2).alias("c"),
-            (F.col("l_suppkey") * 2 + 1).alias("s"),
-        )
-        .distinct()
+    contrib = _pagerank_edges(spark, sf_dir)
+    seed = _pagerank_seed(contrib).withColumn("_prev", F.lit(None).cast("long"))
+
+    def step(ranks: DataFrame) -> DataFrame:
+        prev = ranks.select("node", F.col("rank_u").alias("_prev"))
+        return _pagerank_step(contrib, ranks).join(prev, "node", "left")
+
+    # residual over nodes present in both rounds (null _prev drops out)
+    ranks, iters = fixpoint(
+        seed,
+        step,
+        observe={
+            "l1_delta": F.sum(F.abs(F.col("rank_u") - F.col("_prev"))),
+            "l1_rank": F.sum(F.when(F.col("_prev").isNotNull(), F.col("rank_u"))),
+        },
+        until=lambda _, r: bool(r["l1_rank"])
+        and r["l1_delta"] is not None
+        and r["l1_delta"] < eps_rel * r["l1_rank"],
+        rounds=max_iter,
     )
-    edges = pairs.select(
-        F.col("c").alias("src"), F.col("s").alias("dst")
-    ).unionAll(pairs.select(F.col("s").alias("src"), F.col("c").alias("dst")))
-    outdeg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
-    contrib_edges = edges.join(outdeg, "src").persist()
-    ranks = (
-        edges.select("src")
-        .distinct()
-        .select(
-            F.col("src").alias("node"),
-            F.lit(1000000).cast("long").alias("rank_u"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    iters = 0
-    try:
-        for iters in range(1, max_iter + 1):
-            nxt = (
-                contrib_edges.join(ranks, contrib_edges.src == ranks.node)
-                .select("dst", F.expr("rank_u div d").alias("contrib"))
-                .groupBy(F.col("dst").alias("node"))
-                .agg(
-                    F.expr(
-                        "CAST(150000 + (850 * SUM(contrib)) div 1000"
-                        " AS BIGINT)"
-                    ).alias("rank_u")
-                )
-                .localCheckpoint(eager=True)
-            )
-            res = (
-                nxt.join(
-                    ranks.select(
-                        "node", F.col("rank_u").alias("prev_u")
-                    ),
-                    "node",
-                )
-                .agg(
-                    F.sum(F.abs(F.col("rank_u") - F.col("prev_u"))).alias(
-                        "l1_delta"
-                    ),
-                    F.sum("rank_u").alias("l1_rank"),
-                )
-                .head()
-            )
-            superseded = ranks
-            ranks = nxt
-            # the convergence probe above was the last read of the
-            # superseded superstep — free its blocks now (r16: the
-            # cc_fixpoint hygiene; before this, a 60-iteration
-            # convergence pinned 60 dead rank tables until driver GC)
-            unpersist_local_checkpoint(superseded)
-            if (
-                res["l1_rank"]
-                and res["l1_delta"] is not None
-                and res["l1_delta"] < eps_rel * res["l1_rank"]
-            ):
-                break
-    finally:
-        contrib_edges.unpersist()
-    return (
-        ranks.select(
-            "node",
-            "rank_u",
-            F.round(F.col("rank_u") / 1000000.0, 6).alias("rank"),
-        ),
-        iters,
-    )
+    contrib.unpersist()
+    return _ranks_out(ranks), iters
 
 
 @register(
@@ -2071,42 +2004,12 @@ def q_event_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def cc_fixpoint(
-    e: DataFrame, state=None, fail_after: int | None = None
-) -> tuple:
-    """Min-label + pointer-jumping connected-components fixpoint over
-    an undirected edge list (u, v). Returns (labels DataFrame with
-    (node, lbl), round count — rounds executed THIS call, so a resumed
-    run reports only its own work). Each round: hash-min over
-    neighbours, then one label-of-label self-join (path halving) —
-    O(log d) rounds; see q_graph_cc for the full argument.
-
-    Restart semantics (SCALE.md §"Iterative loops under failure"): by
-    default per-round state rides eager localCheckpoint — O(1) plan
-    depth, NOT replayable; an executor loss mid-loop fails the job and
-    the loop restarts from round 0 (cheap at O(log d) rounds). Passing
-    a :class:`~micmac_li3ds_spark.functions.iterate.DurableLoopState`
-    switches each round to a committed parquet round-trip and makes the
-    call RESUMABLE: a re-invocation with the same state dir continues
-    from the highest committed round instead of round 0. ``fail_after``
-    is the test hook that simulates a mid-loop crash (raises AFTER
-    committing that many rounds).
-
-    Storage hygiene (ADVICE r13 #3, landed here r16): in localCheckpoint
-    mode every superseded round's label frame is freed the moment its
-    successor is materialized, and ``sym`` is freed once the loop exits
-    — the returned labels frame is the ONLY surviving checkpoint, so
-    executor storage is O(1) in convergence rounds instead of O(rounds)
-    (on long convergences over large graphs the old behavior pinned one
-    dead vertex-state copy per round until driver GC). Durable mode
-    needs none of this: rounds live in parquet with their own bounded
-    retention."""
-    # Symmetrize via a single explode instead of union-of-two-selects:
-    # the union form evaluated the whole upstream edge build once per
-    # branch inside this checkpoint job (r18 — no runtime subtree
-    # reuse); the explode reads each edge once and emits both
-    # orientations.
-    sym = (
+def _sym_edges(e: DataFrame) -> DataFrame:
+    """Both orientations (a, b) of an undirected edge list (u, v), as an
+    eager checkpoint the loop's rounds re-read. One explode instead of a
+    union of two selects: the union evaluated the whole upstream edge
+    build once per branch."""
+    return (
         e.select(
             F.explode(
                 F.array(
@@ -2118,48 +2021,55 @@ def cc_fixpoint(
         .select("_e.a", "_e.b")
         .localCheckpoint(eager=True)
     )
-    nodes = sym.select(F.col("a").alias("node")).distinct()
-    if state is not None and state.latest_round() is not None:
-        start = state.latest_round()
-        lbl = state.load(start)
-    else:
-        start = 0
-        lbl = nodes.select("node", F.col("node").alias("lbl"))
-        lbl = state.save(lbl, 0) if state is not None else lbl.localCheckpoint(
-            eager=True
-        )
-    # the checkpoint frame backing `lbl` (they differ once the loop
-    # starts pruning the _chg column off each round's checkpoint)
-    lbl_ck = lbl
-    rounds = 0
-    while True:
+
+
+def cc_fixpoint(
+    e: DataFrame, state=None, fail_after: int | None = None
+) -> tuple:
+    """Min-label + pointer-jumping connected-components fixpoint over
+    an undirected edge list (u, v). Returns (labels DataFrame with
+    (node, lbl), round count — rounds executed THIS call, so a resumed
+    run reports only its own work). Each round: hash-min over
+    neighbours, then one label-of-label self-join (path halving) —
+    O(log d) rounds; see q_graph_cc for the full argument.
+
+    Rounds run on :func:`~micmac_li3ds_spark.functions.iterate.fixpoint`:
+    eager local checkpoints by default (restart from round 0 on executor
+    loss, SCALE.md §15), or, with a ``DurableLoopState``, committed
+    parquet rounds that a re-invocation with the same state dir resumes
+    from. ``fail_after`` is the crash-simulation hook (raises AFTER
+    committing that many rounds). The returned labels are the only
+    checkpoint the call leaves behind."""
+    sym = _sym_edges(e)
+    init = (
+        sym.select(F.col("a").alias("node"))
+        .distinct()
+        .select("node", F.col("node").alias("lbl"), F.lit(True).alias("_chg"))
+    )
+
+    def step(lbl: DataFrame) -> DataFrame:
         neighbor_min = (
             sym.join(lbl, sym.b == lbl.node)
             .groupBy(F.col("a").alias("node2"))
             .agg(F.min("lbl").alias("nmin"))
         )
         # `hashed` feeds both sides of the pointer-jumping self-join and
-        # is deliberately NOT materialized (r18, measured: a lazy
-        # persist freed after the round's checkpoint read q_graph_cc
-        # 8.95 s → 12.88 s and q_er_resolve 12.12 s → 14.17 s noop —
-        # per-round storage writes + InMemoryTableScan cost more than
-        # recomputing the two joins over the already-checkpointed
-        # inputs; the parent-lookup side is additionally pruned to
-        # (node, lbl)). Prune-aware exception to the cache-shared-
-        # subtrees rule — see OPTIMIZATION_r18.md.
-        hashed = (
-            lbl.join(neighbor_min, lbl.node == F.col("node2"), "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("lbl"), F.coalesce(F.col("nmin"), F.col("lbl"))
-                ).alias("lbl"),
-                # the round's STARTING label rides along so `changed`
-                # can be folded into the checkpointed frame (below)
-                F.col("lbl").alias("_prev"),
-            )
+        # is deliberately NOT materialised: a persist freed after the
+        # round's checkpoint measured slower (sf0.1 noop: q_graph_cc
+        # 8.95 s → 12.88 s, q_er_resolve 12.12 s → 14.17 s) than
+        # recomputing the two joins over the checkpointed inputs
+        # (OPTIMIZATION_r18.md).
+        hashed = lbl.join(neighbor_min, lbl.node == F.col("node2"), "left").select(
+            "node",
+            F.least(F.col("lbl"), F.coalesce(F.col("nmin"), F.col("lbl"))).alias(
+                "lbl"
+            ),
+            F.col("lbl").alias("_prev"),
         )
-        jumped = (
+        # the round's starting label rides through the self-join, so the
+        # changed count is observed on the checkpoint job itself instead
+        # of a second n-row join against the previous round
+        return (
             hashed.alias("c")
             .join(
                 hashed.select(
@@ -2173,53 +2083,16 @@ def cc_fixpoint(
                 (F.col("plbl") != F.col("c._prev")).alias("_chg"),
             )
         )
-        if state is not None:
-            # Durable mode is untouched (resumable parquet contract:
-            # rounds persist exactly (node, lbl)): changed via the
-            # original join against the previous round.
-            jumped = state.save(
-                jumped.select("node", "lbl"), start + rounds + 1
-            )
-            changed = (
-                jumped.alias("nw")
-                .join(lbl.alias("old"), "node")
-                .filter(F.col("nw.lbl") != F.col("old.lbl"))
-                .count()
-            )
-            superseded = lbl
-            lbl = jumped
-        else:
-            # r18 (guide §2.4 "remove shuffles outright", applied to the
-            # loop's control plane): the old shape ran TWO jobs per round
-            # — the eager checkpoint, then a jumped⋈lbl join just to
-            # count changed labels. Threading the round's starting label
-            # through the self-join lets `changed` be a filter-count
-            # over the ALREADY CHECKPOINTED blocks: one comparison
-            # column in the checkpoint buys back a whole n-row join +
-            # exchange per round. Measured (min-of-4 noop, sf0.1,
-            # matched ambient windows): q_graph_cc 6.19→5.37 s,
-            # q_er_resolve 8.98→8.32 s (q_llm_semantic_dedup's tiny
-            # 124-edge graph reads flat within drift).
-            ck = jumped.localCheckpoint(eager=True)
-            changed = ck.filter(F.col("_chg")).count()
-            superseded = lbl_ck
-            lbl_ck = ck
-            lbl = ck.select("node", "lbl")
-        rounds += 1
-        if state is None:
-            # the new round is an eager checkpoint and `changed` has
-            # been computed from it — the previous round's blocks are
-            # garbage
-            unpersist_local_checkpoint(superseded)
-        if fail_after is not None and rounds >= fail_after and changed != 0:
-            raise RuntimeError(
-                f"simulated driver crash after {rounds} committed rounds"
-            )
-        if changed == 0:
-            break
-    # the returned labels are a self-contained checkpoint (or parquet
-    # round in durable mode); the symmetric edge list is no longer
-    # reachable from any surviving plan
+
+    lbl, rounds = fixpoint(
+        init,
+        step,
+        observe={"changed": F.sum(F.col("_chg").cast("long"))},
+        until=lambda _, r: not r["changed"],  # None on an empty graph
+        state=state,
+        fail_after=fail_after,
+    )
+    # the labels are self-contained: no surviving plan reads sym
     unpersist_local_checkpoint(sym)
     return lbl, rounds
 
@@ -2271,9 +2144,9 @@ def q_graph_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     collapse geometrically — O(log d) rounds instead of O(d), the
     difference between 8 and 250 supersteps on a 100-TB graph with
     long chains. Labels always point at real node ids, so the jump
-    join is a plain keyed self-join; per-round state rides eager
-    ``localCheckpoint`` (O(1) plan depth — the pagerank_converged
-    pattern) and the driver reads one changed-count scalar per round.
+    join is a plain keyed self-join; rounds run on ``fixpoint`` (one
+    checkpoint per round, O(1) plan depth) and the driver reads one
+    changed-count scalar per round, observed on that round's job.
     All keys are BIGINT node ids: the fixpoint, and therefore the
     histogram, is engine-exact. The oracle is min-label propagation
     too (recursive-term GROUP BY, a DuckDB extension): each iteration
@@ -2292,9 +2165,6 @@ def q_graph_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BFS_CONSOLIDATE_EVERY = 64  # union-depth cap: consolidate settled every K rounds
-
-
 def bfs_distances(e: DataFrame, source: int | None = None) -> tuple:
     """Single-source BFS hop distances over an undirected edge list
     (u, v). Returns (distances DataFrame (node, dist), source id,
@@ -2302,95 +2172,31 @@ def bfs_distances(e: DataFrame, source: int | None = None) -> tuple:
     function of the edge set — engine-reproducible with no RNG).
 
     Each round expands the frontier one hop: frontier ⋈ edges →
-    candidate (neighbour, d+1), anti-join against settled nodes, union
-    into the settled set. Per-round work is one hash join on the
-    frontier (shrinking) + one anti-join on the settled set; state
-    rides eager localCheckpoint like cc_fixpoint (same restart
-    semantics — see SCALE.md §15; pass-through to DurableLoopState is
-    the same two-line change if rounds ever get expensive). Rounds =
-    eccentricity of the source, small on dense behavioral graphs; on
-    long-chain graphs use cc_fixpoint-style pointer jumping for
-    componenthood and reserve BFS for when true hop counts are the
-    deliverable (they cannot be pointer-jumped without losing the
-    metric)."""
-    # Single-explode symmetrization — same rationale as cc_fixpoint's
-    # (one evaluation of the upstream edge build instead of two).
-    sym = (
-        e.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("u").alias("a"), F.col("v").alias("b")),
-                    F.struct(F.col("v").alias("a"), F.col("u").alias("b")),
-                )
-            ).alias("_e")
-        )
-        .select("_e.a", "_e.b")
-        .localCheckpoint(eager=True)
-    )
+    candidate (neighbour, d+1), anti-joined against the settled set.
+    The settled set is ``fixpoint``'s accumulated union of per-round
+    frontier checkpoints, so every settled row is written once, in the
+    round that discovered it: O(|settled|) checkpoint writes instead of
+    re-checkpointing the whole set each round, and one materialising
+    job per round. Rounds = eccentricity of the source + the empty
+    closing round; on long-chain graphs use cc_fixpoint's pointer
+    jumping for componenthood and reserve BFS for when true hop counts
+    are the deliverable (they cannot be pointer-jumped)."""
+    sym = _sym_edges(e)
     if source is None:
         source = sym.agg(F.min("a")).collect()[0][0]
-    spark = e.sparkSession
-    seed = spark.createDataFrame(
-        [(int(source), 0)], "node long, dist int"
-    ).localCheckpoint(eager=True)
-    # r18 (guide §2.4 applied to the loop's control plane): `settled`
-    # is a LAZY UNION of the per-round frontier checkpoints instead of
-    # a re-checkpointed full copy per round. Each settled row is
-    # checkpointed EXACTLY ONCE (in the round that discovered it), so
-    # total checkpoint writes drop from O(rounds · |settled|) to
-    # O(|settled|) — on a deep graph the old shape rewrote the entire
-    # settled set every round — and each round runs ONE materializing
-    # job (the new frontier) instead of two. The union is plan-depth
-    # O(rounds) of LogicalRDD leaves: no recompute, and
-    # unpersist_local_checkpoint(settled) frees every part (the helper
-    # walks the plan). Local sf0.1 A/B is inconclusive under this
-    # host's steal bursts (5.8-7.8 s both shapes); kept for the
-    # structural win — half the materializing jobs per round and
-    # O(|settled|) total checkpoint writes, which is what matters on a
-    # deep 100 TB graph.
-    settled = seed
-    frontier = seed
-    rounds = 0
-    while True:
-        rounds += 1
+    seed = e.sparkSession.createDataFrame([(int(source), 0)], "node long, dist int")
+
+    def step(frontier: DataFrame, settled: DataFrame) -> DataFrame:
         cand = (
             frontier.join(sym, frontier.node == sym.a)
             .select(F.col("b").alias("node"), (F.col("dist") + 1).alias("dist"))
             .distinct()
         )
-        new = cand.join(settled.select("node"), "node", "left_anti")
-        new = new.localCheckpoint(eager=True)
-        if new.limit(1).count() == 0:
-            # the empty terminal frame has no consumer
-            unpersist_local_checkpoint(new)
-            break
-        settled = settled.unionByName(new)
-        frontier = new
-        # r19 (r18 verdict item 6): the lazy union grows one LogicalRDD
-        # leaf per round, so a deep (long-chain) graph pays O(rounds)
-        # plan-analysis cost per round and O(rounds²) total — and every
-        # leaf stays pinned on executors. Consolidate the union into ONE
-        # fresh checkpoint every K rounds and free the superseded
-        # leaves: amortized writes stay O(|settled| · rounds / K) ≈
-        # O(|settled|) for K ≫ 1 while plan width is capped at K leaves.
-        # The frontier is re-derived from the consolidated frame (its
-        # rows are exactly the dist == rounds slice) because its own
-        # checkpoint is among the leaves being freed.
-        if rounds % _BFS_CONSOLIDATE_EVERY == 0:
-            consolidated = settled.localCheckpoint(eager=True)
-            unpersist_local_checkpoint(settled)
-            settled = consolidated
-            frontier = consolidated.filter(F.col("dist") == rounds)
-    # the returned `settled` reads only the per-round checkpoints: the
-    # edge list is not part of its lineage
+        return cand.join(settled.select("node"), "node", "left_anti")
+
+    settled, rounds = fixpoint(seed, step, accumulate=True)
+    # the settled checkpoints do not read the edge list
     unpersist_local_checkpoint(sym)
-    # Registered-query callers (q_graph_sssp) collect the result before
-    # the next registered query begins, so the checkpoint blocks can be
-    # freed deterministically at that point instead of waiting on driver
-    # GC (r18 advice). Direct library callers own the frame's lifetime —
-    # scoped_release refuses outside a scope and we leave the blocks to
-    # GC, exactly the pre-r19 behavior.
-    scoped_release(lambda: unpersist_local_checkpoint(settled))
     return settled, source, rounds
 
 
@@ -2537,43 +2343,18 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: edges come from the capped copurchase_edges build; each
     peel is two keyed joins of the edge list against the shrinking
-    alive set plus one count — shuffle on node ids only, alive rides
-    eager localCheckpoint (O(1) plan depth across peels). Peel count
-    for a REAL degeneracy ladder is O(peeling depth); production runs
-    the loop-until-stable variant with the same per-round plan and a
-    one-scalar changed-count read per round (the cc_fixpoint driver
-    pattern)."""
-    e = copurchase_edges(spark, sf_dir)
-    sym = _kcore_sym(e)
-    alive = sym.select(F.col("a").alias("node")).distinct()
-    prev = None
-    for _ in range(_KCORE_PEELS):
-        alive = _kcore_peel(sym, alive, _KCORE_K).localCheckpoint(eager=True)
-        if prev is not None:
-            # the new peel is materialized — the superseded alive set's
-            # checkpoint blocks are garbage (ADVICE r13 #3 pattern)
-            unpersist_local_checkpoint(prev)
-        prev = alive
+    alive set — shuffle on node ids only, with alive stored per peel by
+    ``fixpoint`` (O(1) plan depth across peels). Graphs whose peeling
+    depth is unknown use kcore_fixpoint, the loop-until-stable form of
+    the same peel."""
+    sym = _sym_edges(copurchase_edges(spark, sf_dir))
+    alive, _ = fixpoint(
+        sym.select(F.col("a").alias("node")).distinct(),
+        lambda a: _kcore_peel(sym, a, _KCORE_K),
+        rounds=_KCORE_PEELS,
+    )
     # sym stays persisted: the RETURNED plan still reads it lazily
     return _kcore_deg(sym, alive)
-
-
-def _kcore_sym(e: DataFrame) -> DataFrame:
-    # Single-explode symmetrization (r18) — same rationale as
-    # cc_fixpoint's: one evaluation of the upstream edge build instead
-    # of one per union branch.
-    return (
-        e.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("u").alias("a"), F.col("v").alias("b")),
-                    F.struct(F.col("v").alias("a"), F.col("u").alias("b")),
-                )
-            ).alias("_e")
-        )
-        .select("_e.a", "_e.b")
-        .localCheckpoint(eager=True)
-    )
 
 
 def _kcore_peel(sym: DataFrame, alive: DataFrame, k: int) -> DataFrame:
@@ -2607,10 +2388,10 @@ def kcore_fixpoint(
     state=None,
     fail_after: int | None = None,
 ) -> tuple:
-    """Loop-until-stable k-core (r9 verdict item 4): peel until no node
-    is removed, with ONE scalar changed-count read per round — the
-    cc_fixpoint driver pattern. Returns (core DataFrame (node,
-    core_deg), rounds executed THIS call).
+    """Loop-until-stable k-core: peel until a round removes no node,
+    read as an unchanged alive count observed on each round's own job.
+    Returns (core DataFrame (node, core_deg), rounds executed THIS
+    call).
 
     The registered q_graph_kcore runs a fixed _KCORE_PEELS unroll (the
     oracle-parity form — bit-identical to the DuckDB peel CTEs, no
@@ -2622,45 +2403,16 @@ def kcore_fixpoint(
     chain remnants). Both forms share _kcore_peel verbatim; SCALE.md
     documents the swap point.
 
-    Restart semantics match cc_fixpoint: default rounds ride eager
-    localCheckpoint (O(1) plan depth, restart-from-zero on executor
-    loss); passing a DurableLoopState makes each round a committed
-    parquet round-trip and the call RESUMABLE from the highest
-    committed round. ``fail_after`` is the crash-simulation hook
-    (raises after committing that many rounds, if not yet stable)."""
-    sym = _kcore_sym(e)
-    if state is not None and state.latest_round() is not None:
-        start = state.latest_round()
-        alive = state.load(start)
-    else:
-        start = 0
-        alive = sym.select(F.col("a").alias("node")).distinct()
-        alive = (
-            state.save(alive, 0)
-            if state is not None
-            else alive.localCheckpoint(eager=True)
-        )
-    n_alive = alive.count()
-    rounds = 0
-    while True:
-        peeled = _kcore_peel(sym, alive, k)
-        peeled = (
-            state.save(peeled, start + rounds + 1)
-            if state is not None
-            else peeled.localCheckpoint(eager=True)
-        )
-        n_next = peeled.count()  # the round's single driver scalar
-        changed = n_alive - n_next
-        if state is None:
-            # localCheckpoint mode only: the superseded alive frame's
-            # blocks are garbage once peeled is materialized (durable
-            # rounds are parquet files with their own retention)
-            unpersist_local_checkpoint(alive)
-        alive, n_alive = peeled, n_next
-        rounds += 1
-        if fail_after is not None and rounds >= fail_after and changed != 0:
-            raise RuntimeError(
-                f"simulated crash after {rounds} committed rounds"
-            )
-        if changed == 0:
-            return _kcore_deg(sym, alive), rounds
+    Restart semantics match cc_fixpoint: ``state`` makes each round a
+    committed parquet round and the call RESUMABLE from the highest
+    committed round; ``fail_after`` is the crash-simulation hook."""
+    sym = _sym_edges(e)
+    alive, rounds = fixpoint(
+        sym.select(F.col("a").alias("node")).distinct(),
+        lambda a: _kcore_peel(sym, a, k),
+        observe={"n": F.count(F.lit(1))},
+        until=lambda prev, cur: prev is not None and prev["n"] == cur["n"],
+        state=state,
+        fail_after=fail_after,
+    )
+    return _kcore_deg(sym, alive), rounds

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from micmac_li3ds_spark.functions.exact import cents
+from micmac_li3ds_spark.functions.iterate import fixpoint
 from micmac_li3ds_spark.registry import register
 from micmac_li3ds_spark.tables import load, read_parquet
 
@@ -315,36 +316,43 @@ SELECT source_ref, ancestor_ref, depth FROM closure
 )
 def q_etl_transfo_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Transform-graph transitive closure (compose transfos along the
-    referential tree): iterative join to fixpoint. Depth is bounded by
-    the frame-tree height (≤ ~5 for sensor rigs), so the loop is a few
-    self-joins — each one shuffle on the frontier key. The oracle is the
-    WITH RECURSIVE formulation."""
-    edges = (
-        read_parquet(spark, os.path.join(PQ_DIR, "transfo.parquet"))
-        .select("source_ref", "target_ref")
-        .cache()
+    referential tree): ``transfo_closure`` over the transfo edges. Depth
+    is bounded by the frame-tree height (≤ ~5 for sensor rigs), so the
+    loop is a few self-joins — each one shuffle on the frontier key. The
+    oracle is the WITH RECURSIVE formulation."""
+    edges = read_parquet(spark, os.path.join(PQ_DIR, "transfo.parquet"))
+    return transfo_closure(edges.select("source_ref", "target_ref"))
+
+
+def transfo_closure(edges: DataFrame) -> DataFrame:
+    """Every (source_ref, ancestor_ref, depth) path of a (source_ref,
+    target_ref) edge list, one row per path like the oracle's UNION ALL
+    recursion. Runs on ``fixpoint``'s accumulate shape until the
+    frontier of depth-d paths is empty. An acyclic graph has no path
+    longer than its edge count, so a round past that count proves a
+    cycle and raises ``ValueError`` instead of looping forever."""
+    n_edges = edges.count()
+    paths, rounds = fixpoint(
+        edges.select(
+            "source_ref",
+            F.col("target_ref").alias("ancestor_ref"),
+            F.lit(1).alias("depth"),
+        ),
+        lambda frontier, _: frontier.alias("c")
+        .join(edges.alias("e"), F.col("e.source_ref") == F.col("c.ancestor_ref"))
+        .select(
+            F.col("c.source_ref").alias("source_ref"),
+            F.col("e.target_ref").alias("ancestor_ref"),
+            (F.col("c.depth") + 1).alias("depth"),
+        ),
+        accumulate=True,
+        rounds=n_edges + 1,
     )
-    frontier = edges.select(
-        "source_ref",
-        F.col("target_ref").alias("ancestor_ref"),
-        F.lit(1).alias("depth"),
-    )
-    closure = frontier
-    for _ in range(10):  # fixpoint: frame trees are shallow
-        nxt = (
-            frontier.alias("c")
-            .join(edges.alias("e"), F.col("e.source_ref") == F.col("c.ancestor_ref"))
-            .select(
-                F.col("c.source_ref").alias("source_ref"),
-                F.col("e.target_ref").alias("ancestor_ref"),
-                (F.col("c.depth") + 1).alias("depth"),
-            )
+    if rounds > max(n_edges, 1):
+        raise ValueError(
+            f"transfo graph has a cycle: paths longer than its {n_edges} edges"
         )
-        if nxt.isEmpty():
-            break
-        closure = closure.unionByName(nxt)
-        frontier = nxt
-    return closure
+    return paths
 
 
 @register(

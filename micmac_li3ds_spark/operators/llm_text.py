@@ -1201,103 +1201,28 @@ def q_llm_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Spark has no fixpoint recursion with dedup (UNION-distinct inside
     WITH RECURSIVE is rejected; UNION ALL diverges on cyclic duplicate
-    graphs), so components are computed by iterative min-label
-    propagation: each round every node takes the min label among itself
-    and its neighbors — converging in O(component diameter) rounds,
-    which for near-duplicate clusters is tiny (they are near-cliques:
-    most members pair directly). Each round is one keyed join + one
-    groupBy — the Pregel shape; at 100 TB each round shuffles on doc_id
-    only, and the frontier shrinks as labels stabilize. The driver-side
-    loop carries only a changed-row COUNT, never row data. The DuckDB
-    oracle reaches the same fixpoint via UNION-distinct recursion.
+    graphs), so components come from ``cc_fixpoint``: min-label
+    propagation with pointer jumping, O(log d) rounds, each one keyed
+    join + one groupBy shuffled on doc_id only. The driver reads one
+    observed changed-label count per round, never row data. The DuckDB
+    oracle reaches the same fixpoint via UNION-distinct recursion."""
+    pairs = q_llm_near_dedup(spark, sf_dir)
+    return dedup_clusters(pairs.select("doc_a", "doc_b"))
 
-    Iterative frames are localCheckpoint'd, not cached (r13,
-    measured: 4.45 s → 3.54 s warm min at sf0.1): cache avoids
-    re-EXECUTION but every round's count() still re-optimizes a plan
-    that chains the full LSH lineage plus one more round — the
-    checkpoint truncates lineage to the materialized blocks, so each
-    round plans O(1) work. Same trick q_llm_lsh_recall ships; the
-    final `labels` is materialized, so the caller's actions never
-    replay the loop. Superseded rounds' checkpoint blocks are
-    unpersisted as soon as the changed-count confirms the new frame is
-    materialized (ADVICE r13 #3): without that, executor storage grows
-    linearly with convergence rounds — each dead round's (doc, lbl)
-    blocks sat pinned until driver GC."""
-    from micmac_li3ds_spark.functions.iterate import (
-        unpersist_local_checkpoint,
-    )
 
-    pairs = q_llm_near_dedup(spark, sf_dir).select("doc_a", "doc_b")
-    # Single-explode symmetrization (r18, the cc_fixpoint rationale):
-    # the union-of-two-selects form evaluated the WHOLE near-dedup
-    # pipeline once per branch inside this checkpoint job; the explode
-    # reads each verified pair once and emits both orientations.
-    edges = (
-        pairs.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col("doc_a").alias("a"), F.col("doc_b").alias("b")
-                    ),
-                    F.struct(
-                        F.col("doc_b").alias("a"), F.col("doc_a").alias("b")
-                    ),
-                )
-            ).alias("_e")
-        )
-        .select("_e.a", "_e.b")
-        .localCheckpoint()
+def dedup_clusters(pairs: DataFrame) -> DataFrame:
+    """(doc_id, cluster_id, cluster_size) for every document in a
+    (doc_a, doc_b) near-duplicate pair list: connected components
+    labelled by their minimum doc_id."""
+    from micmac_li3ds_spark.operators.analytics import cc_fixpoint
+
+    lbl, _rounds = cc_fixpoint(
+        pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
     )
-    labels = (
-        edges.select(F.col("a").alias("doc"))
-        .distinct()
-        .withColumn("lbl", F.col("doc"))
-        .localCheckpoint()
-    )
-    while True:
-        neighbor_min = (
-            edges.join(labels, edges.a == labels.doc)
-            .groupBy(F.col("b").alias("doc2"))
-            .agg(F.min("lbl").alias("nmin"))
-        )
-        # r18 (the cc_fixpoint changed-fold): a `_chg` flag rides the
-        # checkpoint (new label differs iff a neighbor's min undercuts
-        # the current label), so `changed` is a filter-count over the
-        # blocks the checkpoint just materialized — the old shape paid
-        # a second n-row join + exchange per round just to compare
-        # against the previous labels.
-        new_labels = (
-            labels.join(neighbor_min, labels.doc == F.col("doc2"), "left")
-            .select(
-                "doc",
-                F.least(
-                    F.col("lbl"), F.coalesce(F.col("nmin"), F.col("lbl"))
-                ).alias("lbl"),
-                F.coalesce(
-                    F.col("nmin") < F.col("lbl"), F.lit(False)
-                ).alias("_chg"),
-            )
-            .localCheckpoint()
-        )
-        changed = new_labels.filter(F.col("_chg")).count()
-        # the count() above materialized new_labels' checkpoint, so the
-        # previous round's blocks are now garbage — free them instead
-        # of letting them pin executor storage until driver GC
-        # (unpersist walks through the pruning projection to the
-        # checkpointed RDD)
-        unpersist_local_checkpoint(labels)
-        labels = new_labels.select("doc", "lbl")
-        if changed == 0:
-            break
-    # converged: the result below derives from `labels` alone, so the
-    # edge list's checkpoint blocks are garbage too
-    unpersist_local_checkpoint(edges)
     w = Window.partitionBy("cluster_id")
-    return (
-        labels.select("doc", F.col("lbl").alias("cluster_id"))
-        .withColumn("cluster_size", F.count(F.lit(1)).over(w))
-        .select(F.col("doc").alias("doc_id"), "cluster_id", "cluster_size")
-    )
+    return lbl.select(
+        F.col("node").alias("doc_id"), F.col("lbl").alias("cluster_id")
+    ).withColumn("cluster_size", F.count(F.lit(1)).over(w))
 
 
 # ------------------------------------------------- n-gram LM quality score

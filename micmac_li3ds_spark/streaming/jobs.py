@@ -1293,21 +1293,10 @@ def read_near_dedup_clusters(spark: SparkSession, pairs_dir: str) -> DataFrame:
     the labels themselves would require retracting assignments each
     merge invalidates). Involved documents only, like the batch key —
     singletons never enter the pair log."""
-    from micmac_li3ds_spark.operators.analytics import cc_fixpoint
-    from pyspark.sql.window import Window
+    from micmac_li3ds_spark.operators.llm_text import dedup_clusters
 
-    edges = (
-        resolve_state(spark, pairs_dir, "doc_a long, doc_b long")
-        .select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
-        .distinct()
-    )
-    lbl, _rounds = cc_fixpoint(edges)
-    w = Window.partitionBy("cluster_id")
-    return (
-        lbl.select(
-            F.col("node").alias("doc_id"), F.col("lbl").alias("cluster_id")
-        )
-        .withColumn("cluster_size", F.count(F.lit(1)).over(w))
+    return dedup_clusters(
+        resolve_state(spark, pairs_dir, "doc_a long, doc_b long").distinct()
     )
 
 

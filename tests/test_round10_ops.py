@@ -386,14 +386,14 @@ def test_kcore_fixpoint_peels_deeper_than_fixed_unroll(spark):
         _KCORE_PEELS,
         _kcore_deg,
         _kcore_peel,
-        _kcore_sym,
+        _sym_edges,
         kcore_fixpoint,
     )
 
     e = _lollipop_edges(spark, chain_len=12)
 
     # the registered form's fixed unroll, k=2: provably NOT converged
-    sym = _kcore_sym(e)
+    sym = _sym_edges(e)
     alive = sym.select(F.col("a").alias("node")).distinct()
     for _ in range(_KCORE_PEELS):
         alive = _kcore_peel(sym, alive, 2).localCheckpoint(eager=True)

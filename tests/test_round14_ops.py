@@ -456,7 +456,7 @@ def test_bfs_and_kcore_loops_do_not_accumulate_checkpoint_blocks(spark):
         _KCORE_PEELS,
         _kcore_deg,
         _kcore_peel,
-        _kcore_sym,
+        _sym_edges,
         bfs_distances,
         kcore_fixpoint,
     )
@@ -744,10 +744,10 @@ def test_bfs_consolidates_union_depth_past_k_rounds(spark):
     the O(rounds) of the unconsolidated shape."""
     from pyspark.sql import functions as F
 
-    from micmac_li3ds_spark.operators.analytics import (
-        _BFS_CONSOLIDATE_EVERY,
-        bfs_distances,
+    from micmac_li3ds_spark.functions.iterate import (
+        CONSOLIDATE_EVERY as _BFS_CONSOLIDATE_EVERY,
     )
+    from micmac_li3ds_spark.operators.analytics import bfs_distances
 
     n = _BFS_CONSOLIDATE_EVERY + 6
     e = spark.range(0, n - 1).select(
