@@ -149,8 +149,30 @@ def _store(
     if state is not None:
         out = state.save(df, k)
     else:
-        out = df.localCheckpoint(eager=True)
+        out = _without_estimate(df.localCheckpoint(eager=True))
     return out, obs.get if obs is not None else None
+
+
+def _without_estimate(df: DataFrame) -> DataFrame:
+    """``df``'s checkpoint with its stored size estimate dropped.
+
+    A checkpoint keeps the estimated size of the plan it came from, and
+    the next round's join multiplies its children's estimates, so the
+    stored estimate compounds round over round: its bit length doubles
+    each round (12 → 43 → 106 → … → 15,958 bits over the 9 rounds of
+    cc_fixpoint on a 256-node chain) and planning a later round then
+    costs BigInt arithmetic that doubles too. Without a stored estimate
+    Spark falls back to its default size (63 bits), so no round state
+    is broadcast statically; AQE still decides from runtime sizes."""
+    rdd = df._jdf.logicalPlan()
+    jss = df.sparkSession._jsparkSession
+    none = df.sparkSession._jvm.scala.Option.empty()
+    plan = rdd.copy(
+        rdd.output(), rdd.rdd(), rdd.outputPartitioning(), rdd.outputOrdering(),
+        rdd.isStreaming(), rdd.stream(), jss, none, none,
+    )
+    dataset = df.sparkSession._jvm.org.apache.spark.sql.classic.Dataset
+    return DataFrame(dataset.ofRows(jss, plan), df.sparkSession)
 
 
 def unpersist_local_checkpoint(df: DataFrame) -> None:

@@ -146,19 +146,68 @@ _N_PERM = 64
 _BAND_ROWS = 2
 
 
+# Skew guard of every in-array candidate expansion (LSH band buckets,
+# SemDeDup clusters and both streaming twins): a bucket of k ids expands
+# to k²/2 pairs, so buckets with more than BUCKET_CAP ids are dropped.
+BUCKET_CAP = 4096
+
+
+def shingle_sets(docs: DataFrame) -> DataFrame:
+    """(doc_id, sh): the distinct 3-token shingles of every document of
+    at least 3 tokens, the input of every near-duplicate query and of
+    the LSH streaming twin. The token-count guard goes before the
+    shingle projection: a filter placed after it is pushed into the
+    scan with the whole shingle expression inlined, computing every
+    shingle twice. Documents below 3 tokens have no shingle, so the
+    guard drops no pair. Keeps the input's partitioning: the stream
+    writes its micro-batch's shingle sets as state, one file per input
+    partition."""
+    return docs.filter(F.size(tokens("text")) >= 3).select(
+        "doc_id", shingles(tokens("text")).alias("sh")
+    )
+
+
+def _cached_shingle_sets(docs: DataFrame) -> DataFrame:
+    """The batch queries' shingle sets: spread by doc_id over the
+    session's cores, then scope-cached (every batch query reads them
+    from two or more branches).
+
+    Shingling is CPU-heavy map work and the corpus parquet ships as one
+    row group, so the raw text is spread first: a small row shuffle
+    buys full-width compute. Spreading over the shuffle partitions
+    instead (8 on a 4-core session) was slower on all four queries
+    measured, interleaved min-of-4 at sf0.1: near_dedup 3.47 vs
+    3.34 s, containment 2.98 vs 2.95 s, cross_dedup 3.43 vs 3.20 s,
+    decontaminate 1.89 vs 1.66 s, with the same shuffle stages in every
+    final plan. Where the session has 8 or more cores the two counts
+    coincide."""
+    cores = docs.sparkSession.sparkContext.defaultParallelism
+    return _scoped_cache(shingle_sets(docs.repartition(cores, "doc_id")))
+
+
 def minhash_band_keys(d: DataFrame) -> DataFrame:
-    """(doc_id, band_key) LSH band assignment for a (doc_id, sh) input:
-    base-hash each shingle once, take _N_PERM permuted minima, then emit
-    one band key per _BAND_ROWS-row band. Pure per-row array algebra —
-    one nested higher-order expression, no explode/join/shuffle until
-    the caller groups by band_key."""
-    sig = F.transform(
-        F.sequence(F.lit(0), F.lit(_N_PERM - 1)),
-        lambda i: F.array_min(
-            F.transform(
-                F.col("hs"),
-                lambda h: F.pmod(h * (2 * i + 1) + (i + 12345), F.lit(MERSENNE31)),
-            )
+    """(doc_id, band_key) LSH band assignment for a (doc_id, sh) input
+    of non-empty shingle sets: one fold over the shingles' base hashes
+    keeps _N_PERM running permuted minima, then one band key is emitted
+    per _BAND_ROWS-row band. Pure per-row array algebra, no
+    explode/join/shuffle until the caller groups by band_key.
+
+    The base hashes are the fold's input array, so each shingle is
+    hashed once. A per-permutation ``transform(sequence(0, 63), i ->
+    array_min(transform(hs, perm_i)))`` over a projected ``hs`` column
+    does not do that: CollapseProject inlines the hashing, and on an
+    uncached input the shingling too, into the per-permutation lambda,
+    64 times per row. Noop sink, local[4]: sf0.01's 500 uncached docs
+    8.1 s against 0.9 s for the fold; sf0.1's 5,000 cached shingle sets
+    1.56-1.65 s against 1.04-1.29 s; band keys bit-identical."""
+    sig = F.aggregate(
+        F.transform("sh", minhash32),
+        F.array_repeat(F.lit(MERSENNE31).cast("long"), _N_PERM),
+        lambda mins, h: F.transform(
+            mins,
+            lambda m, i: F.least(
+                m, F.pmod(h * (2 * i + 1) + (i + 12345), F.lit(MERSENNE31))
+            ),
         ),
     )
     n_bands = _N_PERM // _BAND_ROWS
@@ -173,21 +222,20 @@ def minhash_band_keys(d: DataFrame) -> DataFrame:
             ],
         ),
     )
-    return (
-        d.select("doc_id", F.transform("sh", minhash32).alias("hs"))
-        .select("doc_id", sig.alias("sig"))
-        .select("doc_id", F.explode(band_keys).alias("band_key"))
+    return d.select("doc_id", sig.alias("sig")).select(
+        "doc_id", F.explode(band_keys).alias("band_key")
     )
 
 
 def lsh_candidate_pairs(banded: DataFrame, bucket_cap: int) -> DataFrame:
     """Distinct (doc_a, doc_b) candidate pairs from a (doc_id,
     band_key) assignment: one groupBy(band_key), pairs expanded INSIDE
-    the sorted bucket array (flatten/transform/slice — linear under
-    CollapseProject), buckets over ``bucket_cap`` dropped (skew guard —
-    see q_llm_near_dedup's docstring for the full cost argument).
-    Shared by q_llm_near_dedup and the q_llm_lsh_recall gauge so the
-    candidate generation the gauge measures IS the one dedup ships."""
+    the sorted bucket array (flatten/transform/slice, linear under
+    CollapseProject), buckets over ``bucket_cap`` dropped (the skew
+    guard of BUCKET_CAP). Every LSH query, the SemDeDup clusters and
+    both streaming twins expand their candidates here, so the candidate
+    generation the q_llm_lsh_recall gauge measures IS the one dedup
+    ships."""
     ids = F.array_sort(F.collect_set("doc_id")).alias("ids")
     pair_structs = F.flatten(
         F.transform(
@@ -208,9 +256,33 @@ def lsh_candidate_pairs(banded: DataFrame, bucket_cap: int) -> DataFrame:
     )
 
 
+def verify_pairs(
+    pairs: DataFrame, vals: DataFrame, threshold: float, **scores
+) -> DataFrame:
+    """Exact verification of candidate (doc_a, doc_b) pairs: attach
+    both sides' values from the two-column (id, value) frame ``vals``,
+    compute each ``name=score(a, b)`` rounded to 6 dp, and keep the
+    pairs whose FIRST score is at or above ``threshold``. Every batch
+    near-duplicate query and both streaming twins verify here, so
+    streaming ≡ batch is shared code."""
+    id_col, val_col = vals.columns
+    va = vals.select(F.col(id_col).alias("doc_a"), F.col(val_col).alias("_a"))
+    vb = vals.select(F.col(id_col).alias("doc_b"), F.col(val_col).alias("_b"))
+    scored = [
+        F.round(score(F.col("_a"), F.col("_b")), 6).alias(name)
+        for name, score in scores.items()
+    ]
+    return (
+        pairs.join(va, "doc_a")
+        .join(vb, "doc_b")
+        .select("doc_a", "doc_b", *scored)
+        .filter(F.col(next(iter(scores))) >= threshold)
+    )
+
+
 @register("q_llm_near_dedup", oracle=_NEAR_DEDUP_ORACLE, tags=("llm", "dedup", "lsh"))
 def q_llm_near_dedup(
-    spark: SparkSession, sf_dir: str, bucket_cap: int = 4096
+    spark: SparkSession, sf_dir: str, bucket_cap: int = BUCKET_CAP
 ) -> DataFrame:
     """MinHash + LSH near-duplicate detection, verified.
 
@@ -218,10 +290,9 @@ def q_llm_near_dedup(
     LSH bands → bucket groupBy for candidate pairs → exact Jaccard
     verification ≥ 0.5.
 
-    Signatures are pure per-row array algebra: one nested higher-order
-    expression (`transform(sequence(0,127), i -> array_min(transform(
-    hashes, h -> perm_i(h))))`) — NO explode, NO join, zero shuffle
-    until the band groupBy. (A vectorized pandas-UDF variant of the
+    Signatures are pure per-row array algebra (``minhash_band_keys``:
+    one fold over each shingle's base hash) — NO explode, NO join, zero
+    shuffle until the band groupBy. (A vectorized pandas-UDF variant of the
     signature stage was measured and LOST to this: the numpy kernel
     itself is fast but Arrow exchange + python-worker stage overhead
     exceeded the whole JVM-side compute at every scale tried.)
@@ -235,50 +306,20 @@ def q_llm_near_dedup(
     qualifying pair (miss probability ~5e-15 per pair at jac 0.8 — the
     corpus' planted duplicates are all ≥ 0.8 with background < 0.1).
     """
-    # The signature stage is CPU-bound map work; a small corpus arriving
-    # as one file would otherwise pin it to one core. Spreading rows
-    # across the cluster first is cheap (narrow row shuffle) and is what
-    # you'd do at 100 TB too if upstream produced few large files.
-    # The token-count guard (≡ "has ≥1 shingle") goes BEFORE the shingle
-    # projection: a post-projection filter gets pushed into the scan with
-    # the whole shingle expression inlined, computing every shingle twice.
-    d = (
-        load(spark, sf_dir, "documents")
-        .repartition(spark.sparkContext.defaultParallelism, "doc_id")
-        .filter(F.size(tokens("text")) >= 3)
-        .select("doc_id", shingles(tokens("text")).alias("sh"))
-    )
-    _scoped_cache(d)
-    banded = minhash_band_keys(d)
-
     # Candidates: group each band bucket and expand pairs INSIDE the
-    # bucket array — one shuffle total. The earlier band self-join read
-    # (and recomputed) the whole signature chain twice and shuffled both
-    # sides; this computes it once. Skew guard for 100 TB: a bucket with
-    # k docs expands to k²/2 pairs, so a boilerplate bucket (one shared
-    # header minhashed identically by 10⁶ docs → 5·10¹¹ pairs) would
-    # dominate the whole job; buckets over ``bucket_cap`` are dropped,
+    # bucket array, one shuffle in total. A band self-join would read
+    # (and recompute) the signature chain twice and shuffle both sides.
+    # Skew guard for 100 TB: a boilerplate bucket (one shared header
+    # minhashed identically by 10⁶ docs → 5·10¹¹ pairs) would dominate
+    # the whole job, so buckets over ``bucket_cap`` are dropped,
     # mirroring q_llm_ngram_jaccard's df_cap. A pair is lost only if
-    # EVERY band it agrees on is over-cap — i.e. both docs are
+    # EVERY band it agrees on is over-cap, i.e. both docs are
     # near-entirely boilerplate, which dedup pipelines drop anyway.
     # Oracle parity is safe because no bucket in this corpus approaches
     # the cap (asserted by test_corpus_band_buckets_far_below_cap).
-    candidates = lsh_candidate_pairs(banded, bucket_cap)
-
-    # exact verification on candidates only
-    sa = d.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
-    sb = d.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
-    verified = (
-        candidates.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(jaccard(F.col("sh_a"), F.col("sh_b")), 6).alias("jac"),
-        )
-        .filter(F.col("jac") >= 0.5)
-    )
-    return verified.select("doc_a", "doc_b", "jac")
+    d = _cached_shingle_sets(load(spark, sf_dir, "documents"))
+    candidates = lsh_candidate_pairs(minhash_band_keys(d), bucket_cap)
+    return verify_pairs(candidates, d, 0.5, jac=jaccard)
 
 
 @register(
@@ -327,62 +368,47 @@ def q_llm_lsh_recall(
     the same cached shingle sets — both 100-TB shapes already argued
     for their parent queries.
 
-    Production posture (round 10, r9 verdict item 3): ``sample_frac``
-    scopes the whole audit to a deterministic doc_id-hash sample —
+    Production posture: ``sample_frac`` scopes the whole audit to a
+    deterministic doc_id-hash sample —
     ``pmod(xxhash64(doc_id), 1e6) < frac·1e6`` — so at 100 TB the
     gauge audits a reproducible slice of the corpus (both truth and
     found sides see the SAME docs; recall over the slice estimates
     corpus recall) instead of brute-forcing every pair. The default
-    1.0 skips the filter entirely — the registered key's plan is
-    bit-identical to round 9's. Out-of-range fractions and fractions
+    1.0 skips the filter entirely. Out-of-range fractions and fractions
     below the 1e-6 quantization floor raise ValueError (a zero-doc
     slice would be silently vacuous); a small VALID slice that happens
     to contain no true pair emits n_true = 0 with recall NULL — a
     monitor must treat that as "slice too small, raise sample_frac",
-    never as a pass. ``df_cap`` (was hardcoded, ADVICE r9)
+    never as a pass. ``df_cap``
     bounds the truth side's posting lists; a doc whose shingles ALL
     exceed it vanishes from n_true and n_found alike, silently
     inflating recall — ``lsh_recall_dfcapped_docs`` reports exactly
     those docs (the copurchase_dropped_groups no-silent-caps
     pattern)."""
     _validate_sample_frac(sample_frac)
-    sp = shuffle_partitions(spark)
-    docs = _sample_docs(load(spark, sf_dir, "documents"), sample_frac)
-    d = _scoped_cache(
-        docs.repartition(sp, "doc_id")
-        .filter(F.size(tokens("text")) >= 3)
-        .select("doc_id", shingles(tokens("text")).alias("sh"))
+    d = _cached_shingle_sets(
+        _sample_docs(load(spark, sf_dir, "documents"), sample_frac)
     )
 
     # truth: exact jac >= 0.5 via rare-shingle posting lists (no
     # minhash anywhere in this branch). Candidate generation stays the
     # POSTING SELF-JOIN deliberately: reusing lsh_candidate_pairs with
-    # the shingle as bucket key was tried and MEASURED SLOWER (warm
-    # sf0.1 wall 8.7 s vs 4.0 s) — the shingle index is millions of
-    # df ≤ 3 groups, where per-row array_sort/slice/transform overhead
-    # swamps the saved shuffle; the in-array expansion wins only for
-    # few-large-bucket shapes (LSH bands, clusters, co-purchase
-    # groups). Same candidates either way; shape chosen by measurement.
-    # r18: the per-pair verify is the shared count-based exact-Jaccard
-    # path (posting_jaccard_pairs — see its docstring for the
-    # measurement: array verify on 1.13M candidate pairs was 9.7 s of
-    # the 12 s wall; the count path removes the shingle-array joins for
-    # every pair without an over-cap shingle on both sides).
-    # r19: ONE aggregation over a left-join membership flag instead of
-    # two count jobs + a crossJoin of their 1-row results — and with a
-    # single consumer the old eager localCheckpoint of `truth` is dead
-    # weight (posting_jaccard_pairs' scoped pairs cache already keeps
-    # the verify pipeline single-evaluation). lsh_candidate_pairs ends
-    # in .distinct(), so the left join cannot duplicate truth rows and
-    # count(_found) ≡ the old inner-join count; n_true = count(*) over
-    # the same truth set; recall is the same single rounded divide
-    # (n_true = 0 still yields NULL). Interleaved min-of-4 at sf0.1:
-    # 3.38 → 3.13 s, two fewer sequential jobs.
+    # the shingle as bucket key was MEASURED SLOWER (warm sf0.1 wall
+    # 8.7 s vs 4.0 s) — the shingle index is millions of df ≤ 3 groups,
+    # where per-row array_sort/slice/transform overhead swamps the saved
+    # shuffle; the in-array expansion wins only for few-large-bucket
+    # shapes (LSH bands, clusters, co-purchase groups). Same candidates
+    # either way; shape chosen by measurement. The truth set has a
+    # single consumer, one aggregation over a left-join membership flag:
+    # lsh_candidate_pairs ends in .distinct(), so the left join cannot
+    # duplicate truth rows, and n_true = 0 still yields a NULL recall
+    # (3.13 s against 3.38 s for two count jobs plus a crossJoin of
+    # their 1-row results, interleaved min-of-4 at sf0.1).
     truth = posting_jaccard_pairs(d, df_cap, 0.5).select("doc_a", "doc_b")
 
     # found: the shipped LSH candidate generation, no Jaccard verify —
     # recall of the CANDIDATE stage is what banding parameters control
-    lsh_cand = lsh_candidate_pairs(minhash_band_keys(d), bucket_cap=4096)
+    lsh_cand = lsh_candidate_pairs(minhash_band_keys(d), BUCKET_CAP)
     flagged = truth.join(
         lsh_cand.withColumn("_found", F.lit(True)),
         ["doc_a", "doc_b"],
@@ -433,8 +459,8 @@ def lsh_recall_dfcapped_docs(
     df_cap: int = 256,
     sample_frac: float = 1.0,
 ) -> DataFrame:
-    """The observability half of q_llm_lsh_recall's ``df_cap``
-    (ADVICE r9, the copurchase_dropped_groups no-silent-caps pattern):
+    """The observability half of q_llm_lsh_recall's ``df_cap`` (the
+    copurchase_dropped_groups no-silent-caps pattern):
     (doc_id, n_shingles) for every document whose shingles ALL exceed
     the posting-list cap. Such a doc cannot appear in any truth pair —
     it is removed from n_true and n_found alike, so the recall gauge is
@@ -448,12 +474,8 @@ def lsh_recall_dfcapped_docs(
     tests/test_round10_ops.py, which also plants an all-boilerplate
     corpus where the reporter fires)."""
     _validate_sample_frac(sample_frac)
-    sp = shuffle_partitions(spark)
-    d = (
+    d = _cached_shingle_sets(
         _sample_docs(load(spark, sf_dir, "documents"), sample_frac)
-        .repartition(sp, "doc_id")
-        .filter(F.size(tokens("text")) >= 3)
-        .select("doc_id", shingles(tokens("text")).alias("sh"))
     )
     post = d.select("doc_id", F.explode("sh").alias("s"))
     rare = (
@@ -494,20 +516,10 @@ def q_llm_ngram_jaccard(
     DF pass pre-aggregates on the same key as the posting join, so it
     rides the identical shuffle partitioning.
 
-    Round-7 perf note (timing audit): the corpus ships as ONE parquet
-    row group, so the CPU-heavy shingling expression ran single-
-    threaded and — referenced by the posting branch and both verify
-    branches — recomputed three times (~35 s at sf0.1). The
-    repartition spreads the text work across the cluster (shuffle
-    cost = the tiny raw text; compute is the expensive part) and the
-    scoped cache materializes shingle sets once — the same plan
-    discipline q_llm_near_dedup uses."""
-    sp = shuffle_partitions(spark)
-    d = _scoped_cache(
-        load(spark, sf_dir, "documents")
-        .repartition(sp, "doc_id")
-        .select("doc_id", shingles(tokens("text")).alias("sh"))
-    )
+    The shingle sets are read by the posting branch and both verify
+    branches, so they are scope-cached: recomputed per consumer on the
+    one-row-group corpus they cost ~35 s at sf0.1."""
+    d = _cached_shingle_sets(load(spark, sf_dir, "documents"))
     return posting_jaccard_pairs(d, df_cap, 0.6)
 
 
@@ -518,52 +530,30 @@ def posting_jaccard_pairs(
     (doc_id, sh) frame via the inverted-index path — shared by
     q_llm_ngram_jaccard and q_llm_lsh_recall's truth side.
 
-    r18 optimization (guide §2.3 "shuffle keys and metadata instead of
-    payloads" applied to the VERIFY stage): the old shape attached both
-    full shingle arrays to every candidate pair and ran
-    array_intersect/array_union per pair — at sf0.1 that is 1.13M
-    candidate pairs × ~150-element string arrays, 9.7 s of the 12 s
-    query (measured solo, noop-style stage timing). But the self-join
-    can count each pair's SHARED RARE shingles (``c``) in the same
-    shuffle the old ``distinct`` already paid, and per doc we know
-    n_sh (total shingles) and n_hot (shingles over ``df_cap``). Since
-    both docs' posting rows use the same global rare set,
-    |A∩B| = c + |A∩B∩hot| and |A∩B∩hot| ≤ min(hot_a, hot_b): for any
-    pair where EITHER side has zero hot shingles, |A∩B| = c exactly and
-    jac = c/(n_a + n_b − c) — pure integer-count arithmetic, identical
-    to the array result bit for bit (same integers, one IEEE divide).
-    Only pairs where BOTH docs carry over-cap shingles fall back to the
-    array verify; on any deduplicate-worthy corpus that is a sliver
-    (boilerplate-heavy docs), and the candidate SET is unchanged — a
-    pair still surfaces iff it shares ≥ 1 rare shingle.
+    Verify by counts, not arrays ("shuffle keys and metadata instead of
+    payloads"): attaching both shingle arrays to each of the 1.13 M
+    candidate pairs at sf0.1 and running array_intersect/array_union
+    per pair took 9.7 s of a 12 s query. The self-join instead counts
+    each pair's SHARED RARE shingles (``c``) in the shuffle it pays
+    anyway, and ``n_sh`` (the doc's shingle count, computed before the
+    explode) rides every posting row into the pair's grouping key.
+    Both docs' posting rows use the same global rare set, so
+    |A∩B| = c + |A∩B∩hot|, and |A∩B∩hot| = 0 as soon as EITHER doc
+    has no over-cap shingle: then jac = c/(n_a + n_b − c), the same
+    integers and the same IEEE divide as the array result, bit for
+    bit. Only pairs where BOTH docs carry over-cap shingles go to the
+    array verify (``verify_pairs``); on a dedup-worthy corpus that is a
+    sliver of boilerplate-heavy docs, and the candidate SET is
+    unchanged: a pair surfaces iff it shares ≥ 1 rare shingle.
 
-    Both branches round to 6 dp after the same int/int division, so the
-    result multiset is unchanged (verified against the brute-force
-    DuckDB oracle at sf0.001/sf0.01/sf0.1).
-
-    r19 restructure (same integers, same candidate set — stage-timed at
-    sf0.1 with the caches pre-built: self-join 0.66 s, +groupBy 0.99 s,
-    +two stats joins 1.75 s, full two-branch union 5.19 s):
-
-    * the old shape's dominant cost was NOT the self-join — the
-      exact/array branches each re-derived the whole
-      self-join + groupBy + stats pipeline (no runtime subtree reuse on
-      this build), doubling it, and the per-doc stats needed a
-      260k-row groupBy(doc_id) plus two joins over the 1.13 M pairs.
-    * ``n_sh`` now rides every posting row from the explode projection
-      (computed per doc BEFORE the explode — free), so the pair
-      aggregate carries (n_a, n_b) in its grouping key and both stats
-      joins and the per-doc aggregate disappear.
-    * hot-side classification needs only a BOOLEAN per doc ("has any
-      over-cap shingle"), not the count: |A∩B∩hot| = 0 as soon as
-      EITHER side has no hot shingle, which is exactly
-      least(hot_a, hot_b) == 0 in the old arithmetic. ``hot_docs`` is
-      the distinct doc set of the over-cap posting rows; two left
-      joins attach the flags (AQE broadcasts the build side when it is
-      small — on a dedup-worthy corpus it is near-empty).
-    * the flagged pairs frame (5 ints + 2 booleans per row) is
-      scoped-cached so the union's two branches read ONE
-      materialization instead of recomputing the self-join each.
+    ``hot_docs`` (the distinct docs of the over-cap posting rows) is
+    attached by two left joins that AQE broadcasts when small. The
+    flagged pairs frame (5 ints + 2 booleans per row) is scope-cached
+    so both branches read one materialisation: without it each branch
+    re-derives the self-join, groupBy and stats pipeline (stage-timed
+    at sf0.1, caches pre-built: self-join 0.66 s, +groupBy 0.99 s,
+    +two stats joins 1.75 s, full two-branch union 5.19 s). Verified
+    against the brute-force DuckDB oracle at sf0.001/sf0.01/sf0.1.
     """
     post = d.select(
         "doc_id", F.size("sh").alias("n_sh"), F.explode("sh").alias("s")
@@ -571,9 +561,7 @@ def posting_jaccard_pairs(
     dfreq = post.groupBy("s").agg(F.count(F.lit(1)).alias("df"))
     # One df-join attaches the shingle frequency to every posting row;
     # the rare slice feeds the self-join twice and the hot slice feeds
-    # the hot-doc set, so the joined frame is materialized once (the
-    # r18 cache covered only the rare slice and paid the per-doc stats
-    # pass separately).
+    # the hot-doc set, so the joined frame is materialized once.
     post_all = _scoped_cache(post.join(dfreq, "s"))
     post_r = post_all.filter(F.col("df") <= df_cap).select(
         "doc_id", "n_sh", "s"
@@ -615,23 +603,11 @@ def posting_jaccard_pairs(
     exact_by_count = pairs_h.filter(
         F.col("_hot_a").isNull() | F.col("_hot_b").isNull()
     ).select("doc_a", "doc_b", F.round(count_jac, 6).alias("jac"))
-    sa = d.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
-    sb = d.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
-    verified_by_arrays = (
-        pairs_h.filter(
-            F.col("_hot_a").isNotNull() & F.col("_hot_b").isNotNull()
-        )
-        .select("doc_a", "doc_b")
-        .join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(jaccard(F.col("sh_a"), F.col("sh_b")), 6).alias("jac"),
-        )
+    both_hot = pairs_h.filter(
+        F.col("_hot_a").isNotNull() & F.col("_hot_b").isNotNull()
     )
-    return exact_by_count.unionByName(verified_by_arrays).filter(
-        F.col("jac") >= threshold
+    return exact_by_count.filter(F.col("jac") >= threshold).unionByName(
+        verify_pairs(both_hot.select("doc_a", "doc_b"), d, threshold, jac=jaccard)
     )
 
 
@@ -992,17 +968,11 @@ def q_llm_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange is the per-doc overlap count. This is the shape that scans
     100 TB of training text against a benchmark suite in one pass.
 
-    Round-7 perf note: the one-row-group corpus file made the CPU-heavy
-    shingling single-threaded, and the bench/train branches recomputed
-    it (~13 s at sf0.1); repartition + scoped cache spreads and
-    materializes it once (~4 s) — see q_llm_ngram_jaccard."""
-    sp = shuffle_partitions(spark)
-    d = _scoped_cache(
-        load(spark, sf_dir, "documents")
-        .repartition(sp, "doc_id")
-        .select("doc_id", shingles(tokens("text")).alias("sh"))
-    )
-    post = d.filter(F.size("sh") > 0).select(
+    The bench and train branches both read the shingle sets, so they
+    are scope-cached: recomputed per branch on the one-row-group corpus
+    they cost ~13 s at sf0.1 against ~4 s."""
+    d = _cached_shingle_sets(load(spark, sf_dir, "documents"))
+    post = d.select(
         "doc_id",
         F.size("sh").cast("long").alias("n_shingles"),
         F.explode("sh").alias("g"),
@@ -1724,56 +1694,17 @@ def q_llm_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate was missed). Same scale shape as near-dedup: signature
     algebra in codegen, one band shuffle, in-bucket pair expansion,
     exact verification on candidates only."""
-    d = (
-        load(spark, sf_dir, "documents")
-        .repartition(spark.sparkContext.defaultParallelism, "doc_id")
-        .filter(F.size(tokens("text")) >= 3)
-        .select("doc_id", shingles(tokens("text")).alias("sh"))
+    d = _cached_shingle_sets(load(spark, sf_dir, "documents"))
+    candidates = lsh_candidate_pairs(minhash_band_keys(d), BUCKET_CAP)
+    return verify_pairs(
+        candidates, d, 0.8, containment=_containment, jac=jaccard
     )
-    _scoped_cache(d)
-    banded = minhash_band_keys(d)
-    ids = F.array_sort(F.collect_set("doc_id")).alias("ids")
-    pair_structs = F.flatten(
-        F.transform(
-            F.col("ids"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ids"), i + 2, F.size(F.col("ids"))),
-                lambda y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
-            ),
-        )
-    )
-    candidates = (
-        banded.groupBy("band_key")
-        .agg(ids)
-        .filter((F.size("ids") > 1) & (F.size("ids") <= 4096))
-        .select(F.explode(pair_structs).alias("p"))
-        .select(F.col("p.doc_a").alias("doc_a"), F.col("p.doc_b").alias("doc_b"))
-        .distinct()
-    )
-    sa = d.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
-    sb = d.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
-    inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
-    return (
-        candidates.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(
-                inter
-                / F.least(F.size("sh_a"), F.size("sh_b")).cast("double"),
-                6,
-            ).alias("containment"),
-            F.round(
-                inter
-                / F.size(F.array_union(F.col("sh_a"), F.col("sh_b"))).cast(
-                    "double"
-                ),
-                6,
-            ).alias("jac"),
-        )
-        .filter(F.col("containment") >= 0.8)
-    )
+
+
+def _containment(a, b):
+    """|A∩B| / min(|A|, |B|) over two distinct-element arrays."""
+    inter = F.size(F.array_intersect(a, b))
+    return inter / F.least(F.size(a), F.size(b))
 
 
 _SPAN_N = 12
@@ -2070,7 +2001,7 @@ SELECT doc_a, doc_b, jac FROM pairs WHERE jac >= 0.5
     tags=("llm", "dedup", "lsh", "decontamination"),
 )
 def q_llm_cross_dedup(
-    spark: SparkSession, sf_dir: str, bucket_cap: int = 4096
+    spark: SparkSession, sf_dir: str, bucket_cap: int = BUCKET_CAP
 ) -> DataFrame:
     """CROSS-corpus near-duplicate join — the near-dup form of
     train/eval decontamination (q_llm_decontaminate catches exact
@@ -2088,13 +2019,7 @@ def q_llm_cross_dedup(
     per-side ``bucket_cap`` skew guard and the exact-Jaccard
     verification pass carry over unchanged; the oracle brute-forces
     the bipartite product."""
-    d = (
-        load(spark, sf_dir, "documents")
-        .repartition(spark.sparkContext.defaultParallelism, "doc_id")
-        .filter(F.size(tokens("text")) >= 3)
-        .select("doc_id", shingles(tokens("text")).alias("sh"))
-    )
-    _scoped_cache(d)
+    d = _cached_shingle_sets(load(spark, sf_dir, "documents"))
     banded = minhash_band_keys(d).withColumn(
         "side", F.pmod(F.col("doc_id"), F.lit(2))
     )
@@ -2128,18 +2053,7 @@ def q_llm_cross_dedup(
         )
         .distinct()
     )
-    sa = d.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
-    sb = d.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
-    return (
-        candidates.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(jaccard(F.col("sh_a"), F.col("sh_b")), 6).alias("jac"),
-        )
-        .filter(F.col("jac") >= 0.5)
-    )
+    return verify_pairs(candidates, d, 0.5, jac=jaccard)
 
 
 @register(

@@ -21,6 +21,11 @@ from micmac_li3ds_spark.functions.vector import (
     l2_norm,
     l2_normalize,
 )
+from micmac_li3ds_spark.operators.llm_text import (
+    BUCKET_CAP,
+    lsh_candidate_pairs,
+    verify_pairs,
+)
 from micmac_li3ds_spark.registry import register
 from micmac_li3ds_spark.tables import load
 
@@ -252,37 +257,27 @@ def q_llm_embed_dedup(
     property-tested in tests/test_properties.py (candidate counts
     shrink with planes, strong pairs survive a multi-band run)."""
     e = _emb(spark, sf_dir)
-    # The bucket self-join shuffles ONLY (vec_id, band, bucket) — r18,
-    # guide §2.3 "shuffle keys and metadata instead of payloads": the
-    # previous n_bands=1 path carried both 64-double vectors through
-    # both sides of the exchange just to hand them to the verify;
-    # attaching vectors AFTER pairing costs two equi-joins against the
-    # (far smaller) embedding table instead of widening every shuffled
-    # candidate row. Same pairs, same cosine values.
+    # The bucket self-join shuffles ONLY (vec_id, band, bucket) ("shuffle
+    # keys and metadata instead of payloads"): carrying both 64-double
+    # vectors through both sides of the exchange just to hand them to
+    # the verify widens every shuffled candidate row, while attaching
+    # them after pairing costs two equi-joins against the far smaller
+    # embedding table. Same pairs, same cosine values.
     b = sign_buckets(e, n_planes=n_planes, n_bands=n_bands).select(
         "vec_id", "band", "bucket"
     )
-    a = b.select(F.col("vec_id").alias("id_a"), "band", "bucket")
-    c = b.select(F.col("vec_id").alias("id_b"), "band", "bucket")
+    a = b.select(F.col("vec_id").alias("doc_a"), "band", "bucket")
+    c = b.select(F.col("vec_id").alias("doc_b"), "band", "bucket")
     ids = (
         a.join(c, ["band", "bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
+        .filter(F.col("doc_a") < F.col("doc_b"))
+        .select("doc_a", "doc_b")
     )
     if n_bands > 1:
         # a pair can collide in several bands; dedup ids only (cheap)
         ids = ids.distinct()
-    e_a = e.select(F.col("vec_id").alias("id_a"), F.col("v").alias("va"))
-    e_b = e.select(F.col("vec_id").alias("id_b"), F.col("v").alias("vb"))
-    pairs = ids.join(e_a, "id_a").join(e_b, "id_b")
-    return (
-        pairs.select(
-            "id_a",
-            "id_b",
-            F.round(cosine(F.col("va"), F.col("vb")), 6).alias("cos_sim"),
-        )
-        .filter(F.col("cos_sim") >= 0.15)
-    )
+    pairs = verify_pairs(ids, e.select("vec_id", "v"), 0.15, cos_sim=cosine)
+    return pairs.withColumnsRenamed({"doc_a": "id_a", "doc_b": "id_b"})
 
 
 @register(
@@ -626,7 +621,7 @@ FROM e LEFT JOIN lab ON lab.nm = e.vec_id
     tags=("llm", "vector", "dedup", "iterative"),
 )
 def q_llm_semantic_dedup(
-    spark: SparkSession, sf_dir: str, tau: float = 0.42, cluster_cap: int = 4096
+    spark: SparkSession, sf_dir: str, tau: float = 0.42, cluster_cap: int = BUCKET_CAP
 ) -> DataFrame:
     """SemDeDup-shaped semantic deduplication (Abbas et al. 2023):
     k-means-partition the embedding space, generate candidate pairs
@@ -647,57 +642,45 @@ def q_llm_semantic_dedup(
     centroid assignment is a broadcast map-side scan over k centroids
     with a map-side packed-key min argmin — the exchange carries n
     assignment rows, not n·k scored rows, and no WindowExec in the plan
-    (q_llm_cluster_assign's plan, rewritten together round 10, r9
-    verdict item 2); in-cluster pair expansion reuses
+    (q_llm_cluster_assign's plan); in-cluster pair expansion reuses
     lsh_candidate_pairs — ONE groupBy(cluster), pairs expanded inside
     the sorted id array, clusters over ``cluster_cap`` dropped (the
     bucket_cap / copurchase group_cap discipline — a mega-cluster is
     exactly where you'd RE-cluster with larger k instead of pairing);
-    cosine verify touches candidates only; components run on
-    cc_fixpoint's O(log d) pointer-jumping rounds. The oracle mirrors
+    cosine verify (``verify_pairs``) touches candidates only;
+    components run on cc_fixpoint's O(log d) pointer-jumping rounds and
+    become keepers in ``semantic_keepers``. The oracle mirrors
     each stage (row_number assignment with the round-6dp/centroid-id
     tiebreak, brute-force in-cluster pairs, min-label recursive GROUP
     BY propagation) — full value-hash parity including singleton
     keepers."""
-    from micmac_li3ds_spark.operators.analytics import cc_fixpoint
-    from micmac_li3ds_spark.operators.llm_text import lsh_candidate_pairs
-
     e = _emb(spark, sf_dir)
     c = e.filter(F.col("vec_id") < _N_CENTROIDS).select(
         F.col("vec_id").alias("cid"), F.col("v").alias("cv")
     )
     asg = nearest_centroid_assign(e, c, n_centroids=_N_CENTROIDS).select(
-        "vec_id", F.col("centroid_id").alias("cid")
+        F.col("centroid_id").cast("string").alias("band_key"),
+        F.col("vec_id").alias("doc_id"),
     )
-
     # in-cluster candidates: the shared capped in-array expansion
-    pairs = lsh_candidate_pairs(
-        asg.select(
-            F.col("cid").cast("string").alias("band_key"),
-            F.col("vec_id").alias("doc_id"),
-        ),
-        bucket_cap=cluster_cap,
-    )
-    ea = e.select(F.col("vec_id").alias("doc_a"), F.col("v").alias("va"))
-    eb = e.select(F.col("vec_id").alias("doc_b"), F.col("v").alias("vb"))
-    edges = (
-        pairs.join(ea, "doc_a")
-        .join(eb, "doc_b")
-        .filter(F.round(cosine(F.col("va"), F.col("vb")), 6) >= tau)
-        .select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
-    )
+    pairs = lsh_candidate_pairs(asg, bucket_cap=cluster_cap)
+    edges = verify_pairs(pairs, e.select("vec_id", "v"), tau, cos=cosine)
+    return semantic_keepers(e.select("vec_id"), edges)
 
-    lbl, _rounds = cc_fixpoint(edges)
-    return (
-        e.select("vec_id")
-        .join(lbl, e["vec_id"] == lbl["node"], "left")
-        .select(
-            "vec_id",
-            F.coalesce(F.col("lbl"), F.col("vec_id")).alias("keeper"),
-            (
-                F.coalesce(F.col("lbl"), F.col("vec_id")) == F.col("vec_id")
-            ).alias("is_kept"),
-        )
+
+def semantic_keepers(vec_ids: DataFrame, pairs: DataFrame) -> DataFrame:
+    """(vec_id, keeper, is_kept) for every id of ``vec_ids``: the
+    minimum id of its connected component in the (doc_a, doc_b) pair
+    list, or itself when it is in no pair. Shared by
+    q_llm_semantic_dedup and the streaming SemDeDup snapshot."""
+    from micmac_li3ds_spark.operators.analytics import cc_fixpoint
+
+    lbl, _rounds = cc_fixpoint(
+        pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
+    )
+    keeper = F.coalesce(F.col("lbl"), F.col("vec_id"))
+    return vec_ids.join(lbl, vec_ids["vec_id"] == lbl["node"], "left").select(
+        "vec_id", keeper.alias("keeper"), (keeper == F.col("vec_id")).alias("is_kept")
     )
 
 

@@ -24,6 +24,21 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from micmac_li3ds_spark.functions.exact import cents
+from micmac_li3ds_spark.functions.vector import cosine
+from micmac_li3ds_spark.operators.llm_text import (
+    BUCKET_CAP,
+    dedup_clusters,
+    exact_fingerprint,
+    jaccard,
+    lsh_candidate_pairs,
+    minhash_band_keys,
+    shingle_sets,
+    verify_pairs,
+)
+from micmac_li3ds_spark.operators.llm_vector import (
+    nearest_centroid_assign,
+    semantic_keepers,
+)
 from micmac_li3ds_spark.streaming.compaction import (
     auto_compact,
     check_cadence,
@@ -828,29 +843,6 @@ def _fresh_pairs(pairs: DataFrame, new_ids: DataFrame) -> DataFrame:
     )
 
 
-def _verify_pairs(
-    fresh: DataFrame, state: DataFrame, id_col: str, val_col: str, score,
-    name: str, threshold: float,
-) -> DataFrame:
-    """Exact verification of candidate pairs: join both sides' values
-    from the accumulated ``state`` on ``id_col``, score them with
-    ``score(a, b)`` rounded to 6 dp (the batch twins' rounding), and
-    keep (doc_a, doc_b, <name>) at or above ``threshold``."""
-    a, b = f"{val_col}_a", f"{val_col}_b"
-    va = state.select(F.col(id_col).alias("doc_a"), F.col(val_col).alias(a))
-    vb = state.select(F.col(id_col).alias("doc_b"), F.col(val_col).alias(b))
-    return (
-        fresh.join(va, "doc_a")
-        .join(vb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(score(F.col(a), F.col(b)), 6).alias(name),
-        )
-        .filter(F.col(name) >= threshold)
-    )
-
-
 def run_streaming_near_dedup(
     stream: DataFrame,
     shingle_dir: str,
@@ -858,7 +850,7 @@ def run_streaming_near_dedup(
     pairs_dir: str,
     checkpoint: str,
     threshold: float = 0.5,
-    bucket_cap: int = 4096,
+    bucket_cap: int = BUCKET_CAP,
     compact_every: "int | None" = None,
     horizon_batches: "int | None" = None,
 ):
@@ -868,12 +860,12 @@ def run_streaming_near_dedup(
     EVERYTHING ALREADY SEEN as batches arrive, not in a nightly
     all-corpus rebuild.
 
-    Shares the batch pipeline's EXACT components (tokens → 3-token
-    shingles → minhash_band_keys → lsh_candidate_pairs → exact-Jaccard
-    verify at the same threshold), so streaming ≡ batch is a theorem
-    about bookkeeping, not a reimplementation's luck — and the harness
-    pins it (multi-batch feed vs q_llm_near_dedup's pipeline on the
-    union).
+    Shares the batch pipeline's functions in operators/llm_text.py
+    (shingle_sets → minhash_band_keys → lsh_candidate_pairs →
+    verify_pairs at the same threshold), so streaming ≡ batch is a
+    theorem about bookkeeping, not a reimplementation's luck — and the
+    harness pins it (multi-batch feed vs q_llm_near_dedup's pipeline on
+    the union).
 
     Per micro-batch, under foreachBatch:
 
@@ -916,22 +908,10 @@ def run_streaming_near_dedup(
     and folds age rows out one batch behind it, with drop counts
     reported durably per dir (compaction.read_retention) — see
     ``auto_compact``."""
-    from micmac_li3ds_spark.operators.llm_text import (
-        jaccard,
-        lsh_candidate_pairs,
-        minhash_band_keys,
-        shingles,
-        tokens,
-    )
-
     def dedup_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         read_min = read_floor(batch_id, horizon_batches)
-        d = (
-            batch_df.filter(F.size(tokens("text")) >= 3)
-            .select("doc_id", shingles(tokens("text")).alias("sh"))
-            .persist()
-        )
+        d = shingle_sets(batch_df).persist()
         try:
             write_batch(d, shingle_dir, batch_id)
             bands = write_batch(
@@ -972,9 +952,7 @@ def run_streaming_near_dedup(
                     prune_keys=cand_ids,
                     min_src_batch=read_min,
                 )
-                verified = _verify_pairs(
-                    fresh, corpus, "doc_id", "sh", jaccard, "jac", threshold
-                )
+                verified = verify_pairs(fresh, corpus, threshold, jac=jaccard)
                 write_batch(verified, pairs_dir, batch_id)
             finally:
                 fresh.unpersist()
@@ -1060,8 +1038,6 @@ def run_streaming_exact_dedup(
     are deterministic), and folds age rows out one batch behind that
     window, with drop counts reported durably
     (compaction.read_retention) — see ``auto_compact``."""
-    from micmac_li3ds_spark.operators.llm_text import exact_fingerprint
-
     def dedup_batch(batch_df: DataFrame, batch_id: int) -> None:
         b = batch_df.select(
             "doc_id", exact_fingerprint("text").alias("fp")
@@ -1145,7 +1121,7 @@ def run_streaming_semantic_dedup(
     pairs_dir: str,
     checkpoint: str,
     tau: float = 0.42,
-    cluster_cap: int = 4096,
+    cluster_cap: int = BUCKET_CAP,
     compact_every: "int | None" = None,
     horizon_batches: "int | None" = None,
 ):
@@ -1166,7 +1142,9 @@ def run_streaming_semantic_dedup(
     when the younger one arrived.
 
     Per micro-batch, under foreachBatch (all components SHARED with
-    q_llm_semantic_dedup — streaming ≡ batch is bookkeeping):
+    q_llm_semantic_dedup — nearest_centroid_assign,
+    lsh_candidate_pairs, verify_pairs and, for the snapshot,
+    semantic_keepers — so streaming ≡ batch is bookkeeping):
 
     1. nearest_centroid_assign scores the batch against the broadcast
        centroid set (map-side packed-key argmin — the exchange carries
@@ -1198,12 +1176,6 @@ def run_streaming_semantic_dedup(
     replays are deterministic), and folds age rows out one batch
     behind it, with drop counts reported durably
     (compaction.read_retention) — see ``auto_compact``."""
-    from micmac_li3ds_spark.operators.llm_text import lsh_candidate_pairs
-    from micmac_li3ds_spark.operators.llm_vector import (
-        nearest_centroid_assign,
-    )
-    from micmac_li3ds_spark.functions.vector import cosine
-
     n_cent = centroids.count()
 
     def dedup_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -1234,9 +1206,7 @@ def run_streaming_semantic_dedup(
             bucket_cap=cluster_cap,
         )
         fresh = _fresh_pairs(pairs, new.select("vec_id"))
-        verified = _verify_pairs(
-            fresh, state, "vec_id", "v", cosine, "cos", tau
-        )
+        verified = verify_pairs(fresh, state.select("vec_id", "v"), tau, cos=cosine)
         write_batch(verified, pairs_dir, batch_id)
 
     return _by_batch_job(
@@ -1262,24 +1232,12 @@ def read_semantic_dedup_keepers(
 ) -> DataFrame:
     """On-demand keeper snapshot over the accumulated pair log:
     connected components only MERGE as edges append (monotone — no
-    retraction), so running the shared cc_fixpoint over the log at any
-    moment yields the same (vec_id, keeper, is_kept) contract as
-    q_llm_semantic_dedup over the corpus-so-far."""
-    from micmac_li3ds_spark.operators.analytics import cc_fixpoint
-
-    edges = (
-        resolve_state(spark, pairs_dir, "doc_a long, doc_b long")
-        .select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
-        .distinct()
-    )
-    lbl, _rounds = cc_fixpoint(edges)
-    vecs = resolve_state(spark, vectors_dir, "vec_id long").distinct()
-    return vecs.join(lbl, vecs["vec_id"] == lbl["node"], "left").select(
-        "vec_id",
-        F.coalesce(F.col("lbl"), F.col("vec_id")).alias("keeper"),
-        (
-            F.coalesce(F.col("lbl"), F.col("vec_id")) == F.col("vec_id")
-        ).alias("is_kept"),
+    retraction), so running q_llm_semantic_dedup's own
+    ``semantic_keepers`` over the log at any moment yields its
+    (vec_id, keeper, is_kept) contract over the corpus-so-far."""
+    return semantic_keepers(
+        resolve_state(spark, vectors_dir, "vec_id long").distinct(),
+        resolve_state(spark, pairs_dir, "doc_a long, doc_b long").distinct(),
     )
 
 
@@ -1293,8 +1251,6 @@ def read_near_dedup_clusters(spark: SparkSession, pairs_dir: str) -> DataFrame:
     the labels themselves would require retracting assignments each
     merge invalidates). Involved documents only, like the batch key —
     singletons never enter the pair log."""
-    from micmac_li3ds_spark.operators.llm_text import dedup_clusters
-
     return dedup_clusters(
         resolve_state(spark, pairs_dir, "doc_a long, doc_b long").distinct()
     )

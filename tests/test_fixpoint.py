@@ -9,9 +9,12 @@
    checkpoint-then-count shape.
 3. The transfo closure runs until its frontier is empty, however deep
    the graph, and refuses a cyclic graph instead of looping.
+4. A stored round carries no compounding size estimate.
 """
 
 from __future__ import annotations
+
+import sys
 
 import pytest
 from pyspark.sql import functions as F
@@ -86,6 +89,37 @@ def test_cc_fixpoint_reads_convergence_from_the_round_job(spark):
     assert rounds <= 12
     assert jobs < 74, jobs
     assert {r["lbl"] for r in lbl.collect()} == {0}
+
+
+def test_stored_round_estimate_does_not_compound(spark, monkeypatch):
+    """A checkpoint keeps the size estimate of the plan it came from and
+    each round's join multiplies its children's estimates, so a stored
+    estimate compounds round over round (its bit length doubles per
+    round on this chain) and a late round's planning pays the BigInt
+    arithmetic. Every stored round's estimate must stay below 2⁶⁴."""
+    from micmac_li3ds_spark.functions import iterate
+    from micmac_li3ds_spark.operators.analytics import cc_fixpoint
+
+    store = iterate._store
+    bits = []
+
+    def record(*args):
+        out = store(*args)
+        stats = out[0]._jdf.queryExecution().optimizedPlan().stats()
+        # py4j hands the BigInt over as decimal digits; a compounded
+        # estimate has more digits than Python converts by default
+        bits.append(stats.sizeInBytes().bit_length())
+        return out
+
+    monkeypatch.setattr(iterate, "_store", record)
+    digits = sys.get_int_max_str_digits()
+    sys.set_int_max_str_digits(0)
+    try:
+        _lbl, rounds = cc_fixpoint(_chain(spark, 256))
+    finally:
+        sys.set_int_max_str_digits(digits)
+    assert len(bits) == rounds + 1
+    assert max(bits) < 64, bits
 
 
 def test_cc_fixpoint_stops_on_an_empty_edge_list(spark):

@@ -108,6 +108,36 @@ def test_no_cartesian_product_in_scale_paths(spark, name):
     assert "CartesianProduct" not in p
 
 
+def test_minhash_hashes_each_shingle_once(spark):
+    """minhash_band_keys base-hashes each shingle once: in the optimized
+    plan every xxhash64 sits in the one lambda over the shingle array,
+    never inside a second lambda (the per-permutation one), where it
+    would run once per permutation per shingle."""
+    from micmac_li3ds_spark.functions.text import shingles, tokens
+    from micmac_li3ds_spark.operators.llm_text import minhash_band_keys
+
+    docs = spark.createDataFrame(
+        [(1, "a b c d"), (2, "b c d e")], "doc_id long, text string"
+    )
+    d = docs.select("doc_id", shingles(tokens("text")).alias("sh"))
+    depths = []
+
+    def walk(e, depth):
+        if e.nodeName() == "XxHash64":
+            depths.append(depth)
+        depth += e.nodeName() == "LambdaFunction"
+        for i in range(e.children().size()):
+            walk(e.children().apply(i), depth)
+
+    nodes = [minhash_band_keys(d)._jdf.queryExecution().optimizedPlan()]
+    while nodes:
+        node = nodes.pop()
+        for i in range(node.expressions().size()):
+            walk(node.expressions().apply(i), 0)
+        nodes.extend(node.children().apply(i) for i in range(node.children().size()))
+    assert depths and max(depths) == 1, depths
+
+
 def test_whole_stage_codegen_covers_hot_path(spark):
     # under AQE the pre-execution plan is a placeholder with no codegen
     # subtrees yet, so probe with AQE off — codegen fusing is decided by

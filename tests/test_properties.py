@@ -186,12 +186,11 @@ def test_containment_pairs_share_a_band_bucket(spark, duck, sf_dir):
     loudly instead of parity flaking silently."""
     from pyspark.sql import functions as F
 
-    from micmac_li3ds_spark.functions.text import (
-        DUCK_SHINGLES_CTE,
-        shingles,
-        tokens,
+    from micmac_li3ds_spark.functions.text import DUCK_SHINGLES_CTE
+    from micmac_li3ds_spark.operators.llm_text import (
+        minhash_band_keys,
+        shingle_sets,
     )
-    from micmac_li3ds_spark.operators.llm_text import minhash_band_keys
     from micmac_li3ds_spark.tables import load
 
     exact = duck.execute(
@@ -209,12 +208,7 @@ SELECT doc_a, doc_b FROM pairs WHERE containment >= 0.8
     ).fetchall()
     assert exact, "corpus must plant containment pairs for this test to bite"
 
-    d = (
-        load(spark, sf_dir, "documents")
-        .filter(F.size(tokens("text")) >= 3)
-        .select("doc_id", shingles(tokens("text")).alias("sh"))
-    )
-    banded = minhash_band_keys(d)
+    banded = minhash_band_keys(shingle_sets(load(spark, sf_dir, "documents")))
     cand = {
         (r["doc_a"], r["doc_b"])
         for r in (
@@ -305,21 +299,76 @@ def test_near_dedup_bucket_cap_bounds_mega_bucket(spark, tmp_path):
     assert len(full) == 40 * 39 // 2 + 1
 
 
+def test_short_documents_pass_the_shingle_guard_unchanged(spark, tmp_path):
+    """q_llm_ngram_jaccard and q_llm_decontaminate read their shingle
+    sets through ``shingle_sets``, whose ≥3-token guard drops 1- and
+    2-token documents (the empty text is one token). Such a document
+    has no shingle, so on a corpus planted with them both queries must
+    return exactly the rows of their unguarded DuckDB spelling: a
+    benchmark doc (doc_id % 50 == 0) of two tokens, short training
+    docs, a 0.6-Jaccard boundary pair and an exact duplicate."""
+    import duckdb
+
+    from micmac_li3ds_spark.registry import all_oracles
+    from micmac_li3ds_spark.operators.llm_text import (
+        q_llm_decontaminate,
+        q_llm_ngram_jaccard,
+    )
+
+    texts = {
+        0: "alpha beta gamma delta epsilon",
+        1: "alpha beta gamma delta zeta",
+        2: "alpha",
+        3: "alpha beta",
+        4: "",
+        5: "alpha beta gamma delta epsilon",
+        6: "beta gamma",
+        50: "alpha beta",
+        51: "one two three four five six",
+        52: "one two three four five seven",
+        53: "two three",
+        100: "one two three four",
+    }
+    spark.createDataFrame(
+        [(i, t, "en", "web") for i, t in texts.items()],
+        "doc_id long, text string, lang string, source string",
+    ).withColumn("n_chars", F.length("text")).write.mode("overwrite").parquet(
+        str(tmp_path / "documents.parquet")
+    )
+    duck = duckdb.connect()
+    duck.sql(
+        "CREATE VIEW documents AS SELECT * FROM "
+        f"read_parquet('{tmp_path}/documents.parquet/*.parquet')"
+    )
+
+    def rows(records):
+        return sorted(
+            tuple(round(v, 6) if isinstance(v, float) else v for v in r)
+            for r in records
+        )
+
+    for name, query in (
+        ("q_llm_ngram_jaccard", q_llm_ngram_jaccard),
+        ("q_llm_decontaminate", q_llm_decontaminate),
+    ):
+        got = rows(query(spark, str(tmp_path)).collect())
+        assert got, f"{name}: the planted corpus must yield rows"
+        assert got == rows(duck.execute(all_oracles()[name]).fetchall()), name
+
+
 def test_corpus_band_buckets_far_below_cap(spark):
     """Corpus contract behind q_llm_near_dedup's oracle parity at the
     driver-checked scale (sf0.01): the largest LSH band bucket must sit
     far below the default bucket_cap=4096, so capping cannot change the
     checked result. Measured on the real banded assignment, not a
     proxy."""
-    from micmac_li3ds_spark.functions.text import shingles, tokens
-    from micmac_li3ds_spark.operators.llm_text import minhash_band_keys
+    from micmac_li3ds_spark.operators.llm_text import (
+        minhash_band_keys,
+        shingle_sets,
+    )
     from micmac_li3ds_spark.tables import load
 
-    d = (
-        load(spark, "/root/testdata/sf0.01", "documents")
-        .filter(F.size(tokens("text")) >= 3)
-        .select("doc_id", shingles(tokens("text")).alias("sh"))
-    )
+    d = shingle_sets(load(spark, "/root/testdata/sf0.01", "documents"))
     max_bucket = (
         minhash_band_keys(d)
         .groupBy("band_key")
